@@ -574,6 +574,11 @@ def main() -> None:
                         "cv": calib_cv,
                         "version": CALIB_VERSION},
         "sf": sf,
+        # the session the legs ran on, as Spark resolved it — so a
+        # reader of this line can check the core count it was given
+        # was honoured instead of inferring it from timings
+        "master": spark.sparkContext.master,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
     }
 
     # In-run normalization against the previous round (r10 brief #7):

@@ -21,12 +21,38 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
+# (JavaSparkContext, Hadoop Path class, Hadoop conf) of the live
+# session: resolving ``jvm.org.apache.hadoop.fs.Path`` walks the JVM
+# package tree one Py4J reflection call per name (~6 per lookup), and
+# every helper below needs it — so it is looked up once per context.
+_HADOOP: tuple = (None, None, None)
+
+
+def _hadoop(spark: SparkSession):
+    """(Hadoop ``Path`` class, Hadoop conf) of ``spark``'s context."""
+    global _HADOOP
+    jsc, path_cls, conf = _HADOOP
+    if jsc is not spark._jsc:
+        jsc = spark._jsc
+        path_cls = spark._jvm.org.apache.hadoop.fs.Path
+        conf = jsc.hadoopConfiguration()
+        _HADOOP = (jsc, path_cls, conf)
+    return path_cls, conf
+
+
 def _fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` under the session's Hadoop conf."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
+    path_cls, conf = _hadoop(spark)
+    hpath = path_cls(path)
+    return hpath.getFileSystem(conf), hpath
+
+
+def glob_literal(s: str) -> str:
+    """``s`` with Hadoop glob metacharacters escaped, so it matches
+    only itself inside a ``globStatus`` pattern."""
+    import re
+
+    return re.sub(r"([\\*?\[\]{},^])", r"\\\1", s)
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -185,8 +211,7 @@ def write_text_atomic(spark: SparkSession, path: str,
         write_text(spark, path, text)
         return
     jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        path + ".tmp-" + uuid.uuid4().hex)
+    tmp = _hadoop(spark)[0](path + ".tmp-" + uuid.uuid4().hex)
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(text.encode("utf-8")))

@@ -26,11 +26,13 @@ index table, so a query prunes to J+1 of 2^J partitions
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..queries.registry import register
+from ..queries.similarity import (_fixed_dot, _fixed_point, _qdec,
+                                  _query_row, exact_cosine)
 
 NUM_PLANES = 8
 QUERY_VEC_ID = 0
@@ -59,14 +61,6 @@ def _plane_signs(num_planes: int = NUM_PLANES,
                        .hexdigest()[:15], 16) >> 3) & 1 else -1
              for i in range(dim)]
             for j in range(num_planes)]
-
-
-def _fixed_point(vec: Column) -> Column:
-    """float components → exact BIGINT nano-units (|c| ≤ ~10 ⇒ a
-    64-term signed sum stays far below 2^63 — overflow-free)."""
-    return F.transform(
-        vec, lambda x: F.floor(x.cast("double") * F.lit(1000000000.0)
-                               + F.lit(0.5)).cast("bigint"))
 
 
 def _check_id_col(id_col: str) -> None:
@@ -103,7 +97,7 @@ def lsh_buckets(emb: DataFrame, id_col: str = "vec_id",
     now raises at execution."""
     _check_id_col(id_col)
     ci = F.when(
-        F.size(F.col(vec_col)) == dim, _fixed_point(F.col(vec_col))
+        F.size(F.col(vec_col)) == dim, _fixed_point(vec_col)
     ).otherwise(F.raise_error(F.concat(
         F.lit(f"lsh_buckets: expected {dim}-dim embedding, got "),
         F.size(F.col(vec_col)).cast("string"))))
@@ -169,8 +163,6 @@ def ann_cosine_topk(emb: DataFrame, query_id: int = QUERY_VEC_ID,
     the engine's fixed-point discipline (nano-unit BIGINT components,
     int64 hi/lo dot folds — the sim3/dx3/sx3 pattern), so scores are
     exactly restatable in SQL (ANN_LSH_ORACLE)."""
-    from ..queries.similarity import _fixed_dot
-
     buckets = lsh_buckets(emb, num_planes=num_planes)
     occupancy = (buckets.groupBy("bucket")
                  .agg(F.count("*").cast("bigint")
@@ -185,23 +177,12 @@ def ann_cosine_topk(emb: DataFrame, query_id: int = QUERY_VEC_ID,
     cands = (buckets.join(F.broadcast(probe), "bucket")
                     .filter(F.col("vec_id") != query_id))
 
-    dec = emb.select("vec_id",
-                     _fixed_point(F.col("embedding")).alias("ci"))
-    q = (dec.filter(F.col("vec_id") == query_id)
-            .select(F.col("ci").alias("qci"),
-                    (_fixed_dot("ci", "ci").cast("double")
-                     / F.lit(1e18)).alias("qsq")))
-    scored = (dec.join(cands, "vec_id")
-                 .crossJoin(F.broadcast(q))
-                 .select("vec_id", "bucket",
-                         (_fixed_dot("ci", "qci").cast("double")
-                          / F.lit(1e18)).alias("dot"),
-                         (_fixed_dot("ci", "ci").cast("double")
-                          / F.lit(1e18)).alias("nsq"),
-                         "qsq"))
-    cosine = F.col("dot") / (F.sqrt(F.col("nsq")) * F.sqrt(F.col("qsq")))
+    scored, cosine = exact_cosine(
+        emb.select("vec_id", "embedding").join(cands, "vec_id")
+           .crossJoin(F.broadcast(_query_row(emb, query_id))),
+        "qci", "qsq")
     return (scored.join(F.broadcast(occupancy), "bucket")
-            .select("vec_id", F.round(cosine, 9).alias("cosine"),
+            .select("vec_id", cosine.alias("cosine"),
                     "bucket", "bucket_occupancy")
             .orderBy(F.desc("cosine"), F.asc("vec_id"))
             .limit(k))
@@ -226,14 +207,9 @@ def ivf_search_topk(emb: DataFrame, query_id: int = QUERY_VEC_ID,
     the whole search — cell ranking AND re-rank scores — is exactly
     restatable in ANSI SQL; see IVF_PROBE_ORACLE.
     """
-    from ..queries.similarity import _fixed_dot
-
     dec = emb.select("vec_id", F.col(cell_col).alias("cell"),
-                     _fixed_point(F.col("embedding")).alias("ci"))
-    q = (dec.filter(F.col("vec_id") == query_id)
-            .select(F.col("ci").alias("qci"),
-                    (_fixed_dot("ci", "ci").cast("double")
-                     / F.lit(1e18)).alias("qsq")))
+                     _fixed_point("embedding").alias("ci"))
+    q = _query_row(emb, query_id)
 
     # train: per-cell centroid sums via one wide aggregate (exact
     # int64: |Σci| ≤ nv·2^31); centroid·query divides by the cell
@@ -255,17 +231,12 @@ def ivf_search_topk(emb: DataFrame, query_id: int = QUERY_VEC_ID,
              .limit(nprobe)
              .select("cell"))
 
-    cands = dec.join(F.broadcast(probe), "cell", "left_semi") \
-               .filter(F.col("vec_id") != query_id)
-    scored = (cands.crossJoin(F.broadcast(q))
-              .select("vec_id", "cell",
-                      (_fixed_dot("ci", "qci").cast("double")
-                       / F.lit(1e18)).alias("dot"),
-                      (_fixed_dot("ci", "ci").cast("double")
-                       / F.lit(1e18)).alias("nsq"),
-                      "qsq"))
-    cosine = F.round(F.col("dot")
-                     / (F.sqrt(F.col("nsq")) * F.sqrt(F.col("qsq"))), 9)
+    cands = (emb.select("vec_id", F.col(cell_col).alias("cell"),
+                        "embedding")
+             .join(F.broadcast(probe), "cell", "left_semi")
+             .filter(F.col("vec_id") != query_id))
+    scored, cosine = exact_cosine(cands.crossJoin(F.broadcast(q)),
+                                  "qci", "qsq")
     return (scored.select("vec_id", cosine.alias("cosine"),
                           F.col("cell").cast("bigint").alias("cell"))
             .orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -519,12 +490,10 @@ def query_bucket(vec: list, num_planes: int = NUM_PLANES,
     ``lsh_buckets`` (same md5 hyperplanes, same ``floor(x·1e9+0.5)``
     fixed point, exact integer dots; Python floats are the same IEEE
     doubles Spark uses)."""
-    import math
-
     if len(vec) != dim:
         raise ValueError(f"expected {dim}-dim query vector, got {len(vec)}")
     signs = _plane_signs(num_planes, dim, table)
-    ci = [math.floor(float(x) * 1000000000.0 + 0.5) for x in vec]
+    ci, _ = _qdec(vec)
     bucket = 0
     for j in range(num_planes):
         if sum(s * c for s, c in zip(signs[j], ci)) > 0:
@@ -540,12 +509,10 @@ def query_margins(vec: list, num_planes: int = NUM_PLANES,
     point, same sign matrix). |margin_j| is how close the query sits
     to plane j: the multi-probe ordering flips the nearest planes
     first (plans/ann_index.multiprobe_set)."""
-    import math
-
     if len(vec) != dim:
         raise ValueError(f"expected {dim}-dim query vector, got {len(vec)}")
     signs = _plane_signs(num_planes, dim, table)
-    ci = [math.floor(float(x) * 1000000000.0 + 0.5) for x in vec]
+    ci, _ = _qdec(vec)
     return [sum(s * c for s, c in zip(signs[j], ci))
             for j in range(num_planes)]
 
@@ -559,10 +526,8 @@ def ann_indexed_topk(spark: SparkSession, path: str, query_vec: list,
     carries a literal ``bucket IN (...)`` predicate — static partition
     pruning at plan time, J+1 of 2^J directories read, no job needed
     to discover the probe set. Exact fixed-point cosine re-rank inside
-    the probed buckets (the sx pattern). Returns
-    (vec_id, cosine, bucket)."""
-    import math
-
+    the probed buckets (the sx pattern; a stored zero vector scores
+    a NULL cosine, ranked last). Returns (vec_id, cosine, bucket)."""
     meta = _read_index_meta(spark, path, "ann_lsh")
     mismatches = {k: (meta[k], v) for k, v in (
         ("num_planes", num_planes), ("dim", dim),
@@ -576,26 +541,12 @@ def ann_indexed_topk(spark: SparkSession, path: str, query_vec: list,
 
     b = query_bucket(query_vec, num_planes, dim)
     probes = [b] + [b ^ (1 << j) for j in range(num_planes)]
-    qci = [math.floor(float(x) * 1000000000.0 + 0.5) for x in query_vec]
-    qsq = float(sum(c * c for c in qci)) / 1e18
-
-    from ..queries.similarity import _fixed_dot
-
     scan = (spark.read.parquet(path)
             .filter(F.col("bucket").isin(probes)))
     if exclude_id is not None:
         scan = scan.filter(F.col("vec_id") != exclude_id)
-    qarr = F.array(*[F.lit(c).cast("bigint") for c in qci])
-    dec = scan.select("vec_id", "bucket",
-                      _fixed_point(F.col("embedding")).alias("ci"),
-                      qarr.alias("qci"))
-    scored = dec.select(
-        "vec_id", "bucket",
-        (_fixed_dot("ci", "qci").cast("double") / F.lit(1e18)).alias("dot"),
-        (_fixed_dot("ci", "ci").cast("double") / F.lit(1e18)).alias("nsq"))
-    cosine = F.col("dot") / (F.sqrt(F.col("nsq")) * F.sqrt(F.lit(qsq)))
-    return (scored.select("vec_id", F.round(cosine, 9).alias("cosine"),
-                          "bucket")
+    scored, cosine = exact_cosine(scan, *_qdec(query_vec))
+    return (scored.select("vec_id", cosine.alias("cosine"), "bucket")
             .orderBy(F.desc("cosine"), F.asc("vec_id"))
             .limit(k))
 
@@ -614,7 +565,7 @@ def write_ivf_index(emb: DataFrame, path: str, id_col: str = "vec_id",
       IVF serves queries in practice).
     """
     dec = emb.select(id_col, F.col(cell_col).alias("cell"),
-                     _fixed_point(F.col(vec_col)).alias("ci"),
+                     _fixed_point(vec_col).alias("ci"),
                      F.col(vec_col))
     (dec.drop("ci").repartition(F.col("cell"))
         .write.mode("overwrite").partitionBy("cell")
@@ -637,22 +588,17 @@ def ivf_indexed_topk(spark: SparkSession, path: str, query_vec: list,
     arbitrary-precision, so this is the int64 hi/lo fold's value
     exactly), then scan the posting lists with a literal
     ``cell IN (...)`` predicate — static partition pruning to
-    nprobe of L directories. Exact fixed-point cosine re-rank inside.
+    nprobe of L directories. Exact fixed-point cosine re-rank inside
+    (a stored zero vector scores a NULL cosine, ranked last).
     Returns (vec_id, cosine, cell) — identical to ``ivf_search_topk``
     for the same query vector."""
-    import math
-
-    from ..queries.similarity import _fixed_dot
-
     meta = _read_index_meta(spark, path, "ivf")
     if meta.get("dim") != len(query_vec):
         raise ValueError(
             f"stored IVF index at {path} holds {meta.get('dim')}-dim "
             f"vectors; query vector is {len(query_vec)}-dim")
 
-    qci = [math.floor(float(x) * 1000000000.0 + 0.5) for x in query_vec]
-    qsq = float(sum(c * c for c in qci)) / 1e18
-
+    qci, qsq = _qdec(query_vec)
     cents = spark.read.parquet(f"{path}/centroids").collect()
     ranked = sorted(
         ((float(sum(int(s) * q for s, q in zip(r.csum, qci)))
@@ -664,16 +610,7 @@ def ivf_indexed_topk(spark: SparkSession, path: str, query_vec: list,
             .filter(F.col("cell").isin(probe_cells)))
     if exclude_id is not None:
         scan = scan.filter(F.col("vec_id") != exclude_id)
-    qarr = F.array(*[F.lit(c).cast("bigint") for c in qci])
-    dec = scan.select("vec_id", "cell",
-                      _fixed_point(F.col("embedding")).alias("ci"),
-                      qarr.alias("qci"))
-    scored = dec.select(
-        "vec_id", "cell",
-        (_fixed_dot("ci", "qci").cast("double") / F.lit(1e18)).alias("dot"),
-        (_fixed_dot("ci", "ci").cast("double") / F.lit(1e18)).alias("nsq"))
-    cosine = F.round(
-        F.col("dot") / (F.sqrt(F.col("nsq")) * F.sqrt(F.lit(qsq))), 9)
+    scored, cosine = exact_cosine(scan, qci, qsq)
     return (scored.select("vec_id", cosine.alias("cosine"),
                           F.col("cell").cast("bigint").alias("cell"))
             .orderBy(F.desc("cosine"), F.asc("vec_id"))

@@ -47,6 +47,7 @@ from ..fs import delete_path, path_exists, read_text, write_text_atomic
 from ..operators.similarity import (EMB_DIM, NUM_PLANES, TOP_K,
                                     _fixed_point, _planes_digest,
                                     lsh_buckets, query_bucket)
+from ..queries.similarity import _dot_sql, _qdec, exact_cosine
 from .corpus import (BatchAlreadyIngested, _load_manifests,
                      _manifest_path, _next_seq_id, _superseded,
                      _visible_scan, _write_snapshot, corpus_writer_lock)
@@ -575,7 +576,7 @@ def _mt_bucket_frame(emb: DataFrame, id_col: str, vec_col: str,
         return lsh_buckets(emb, id_col, vec_col, num_planes, dim)
     _check_id_col(id_col)
     ci = F.when(
-        F.size(F.col(vec_col)) == dim, _fixed_point(F.col(vec_col))
+        F.size(F.col(vec_col)) == dim, _fixed_point(vec_col)
     ).otherwise(F.raise_error(F.concat(
         F.lit(f"multi-table bucketing: expected {dim}-dim embedding,"
               f" got "),
@@ -617,7 +618,7 @@ def _attach_buckets(delta: DataFrame, num_planes: int, dim: int,
     carry = delta.columns
     ci = F.when(
         F.size(F.col("embedding")) == dim,
-        _fixed_point(F.col("embedding"))
+        _fixed_point("embedding")
     ).otherwise(F.raise_error(F.concat(
         F.lit(f"ann ingest bucketing: expected {dim}-dim embedding,"
               f" got "),
@@ -676,7 +677,7 @@ def _batch_multiprobe_pairs(q: DataFrame, num_planes: int, dim: int,
     n_buckets = max(1, min(n_buckets, num_tables << num_planes))
     ci = F.when(
         F.size(F.col("embedding")) == dim,
-        _fixed_point(F.col("embedding"))
+        _fixed_point("embedding")
     ).otherwise(F.raise_error(F.concat(
         F.lit(f"batch multiprobe: expected {dim}-dim embedding, "
               f"got "),
@@ -885,45 +886,13 @@ def _ann_scores(scan: DataFrame, qci: list, qsq: float,
                 exclude_id: int | None, storage: str) -> DataFrame:
     """UNSORTED exact scored rows (vec_id, cosine, bucket) of an
     already bucket-pruned scan — the LSH twin of
-    ``ivf_index._ivf_scores``, factored out so the plain and the
-    EARLY-EXIT probes rank literally the same values."""
+    ``ivf_index._ivf_scores`` over the same shared expression
+    (``queries.similarity.exact_cosine``), factored out so the plain
+    and the EARLY-EXIT probes rank literally the same values."""
     if exclude_id is not None:
         scan = scan.filter(F.col("vec_id") != exclude_id)
-    qarr = F.array(*[F.lit(c).cast("bigint") for c in qci])
-    if storage == "int8":
-        from .codes import code_cosine
-        return scan.select(
-            "vec_id",
-            code_cosine(qarr, F.col("code"), F.lit(qsq))
-            .alias("cosine"), "bucket")
-    from ..queries.similarity import _fixed_dot
-
-    dec = scan.select("vec_id", "bucket",
-                      _fixed_point(F.col("embedding")).alias("ci"),
-                      qarr.alias("qci"))
-    scored = dec.select(
-        "vec_id", "bucket",
-        (_fixed_dot("ci", "qci").cast("double") / F.lit(1e18))
-        .alias("dot"),
-        (_fixed_dot("ci", "ci").cast("double") / F.lit(1e18))
-        .alias("nsq"))
-    # nsq > 0: stored zero vectors fold to NULL cosine, never an
-    # ANSI divide-by-zero (see ivf_index._ivf_scores)
-    cosine = F.when(F.col("nsq") > 0, F.round(
-        F.col("dot") / (F.sqrt(F.col("nsq")) * F.sqrt(F.lit(qsq))),
-        9))
+    scored, cosine = exact_cosine(scan, qci, qsq, storage)
     return scored.select("vec_id", cosine.alias("cosine"), "bucket")
-
-
-def _qdec(query_vec: list) -> "tuple[list, float]":
-    """(qci, qsq): the nano-unit fixed-point decode of a query
-    vector plus its ‖q‖²/1e18 — the two driver-side values every
-    probe path derives."""
-    import math
-
-    qci = [math.floor(float(x) * 1000000000.0 + 0.5)
-           for x in query_vec]
-    return qci, float(sum(c * c for c in qci)) / 1e18
 
 
 def _ann_code_topk(scan: DataFrame, query_vec: list, k: int,
@@ -964,33 +933,12 @@ def _ann_rerank_tail(ranked: DataFrame, query_vec: list, k: int,
 def _ann_batch_score(cand: DataFrame, storage: str) -> DataFrame:
     """(qid, vec_id, cosine, bucket) exact per-pair scores over a
     fanned-out candidate frame carrying (qid, vec_id, bucket, qci,
-    qsq, code|embedding) — the batch twin of :func:`_ann_scores`,
-    shared by the plain and the early-exit batch probes."""
-    from ..queries.similarity import _fixed_dot
-
-    if storage == "int8":
-        from .codes import code_cosine
-        return cand.select(
-            "qid", "vec_id",
-            code_cosine(F.col("qci"), F.col("code"), F.col("qsq"))
-            .alias("cosine"), "bucket")
-    rer = cand.select(
-        "qid", "vec_id", "bucket", "qsq",
-        _fixed_point(F.col("embedding")).alias("ci"),
-        F.col("qci"))
-    rer = rer.select(
-        "qid", "vec_id", "bucket", "qsq",
-        (_fixed_dot("ci", "qci").cast("double") / F.lit(1e18))
-        .alias("dot"),
-        (_fixed_dot("ci", "ci").cast("double") / F.lit(1e18))
-        .alias("nsq"))
-    # nsq > 0: stored zero vectors fold to NULL cosine, never an
-    # ANSI divide-by-zero (see ivf_index._ivf_scores)
-    cosine = F.when(F.col("nsq") > 0, F.round(
-        F.col("dot") / (F.sqrt(F.col("nsq")) * F.sqrt(F.col("qsq"))),
-        9))
-    return rer.select("qid", "vec_id", cosine.alias("cosine"),
-                      "bucket")
+    qsq, code|embedding) — the batch twin of :func:`_ann_scores`
+    (``queries.similarity.exact_cosine``), shared by the plain and
+    the early-exit batch probes."""
+    scored, cosine = exact_cosine(cand, "qci", "qsq", storage)
+    return scored.select("qid", "vec_id", cosine.alias("cosine"),
+                         "bucket")
 
 
 def _ann_batch_tail(scored: DataFrame, dec_q: DataFrame, k: int,
@@ -1076,7 +1024,6 @@ def ann_batch_topk(spark: SparkSession, root: str,
     becomes the union of the ranked buckets. Overrides ``hamming``;
     composes with multi-table roots (budget merged across tables)
     and with ``early_exit`` (table-0's own bucket stays the seed)."""
-    from ..queries.similarity import _fixed_dot
     from .migration import resolve_probe_location
 
     root = resolve_probe_location(spark, root)
@@ -1091,9 +1038,8 @@ def ann_batch_topk(spark: SparkSession, root: str,
     masks = _probe_set(0, num_planes, hamming)
     qb = _mt_bucket_frame(q, "qid", "embedding", num_planes, dim, nt)
     dec_q = q.select(
-        "qid", _fixed_point(F.col("embedding")).alias("qci")) \
-        .withColumn("qsq", (_fixed_dot("qci", "qci").cast("double")
-                            / F.lit(1e18)))
+        "qid", _fixed_point("embedding").alias("qci")) \
+        .withColumn("qsq", F.expr(_dot_sql("qci", "qci")))
     # probe pairs carry the flip mask: m == 0 IS the query's own
     # bucket — the early-exit seed (the single-query probes' first
     # probe key). Multi-table roots make m GLOBAL ((t << J) | mask):

@@ -143,7 +143,7 @@ def payload_column(storage: str) -> "tuple[str, Column]":
     if storage == "int8":
         return "code", F.col("code")
     from ..operators.similarity import _fixed_point
-    return "nano", _fixed_point(F.col("embedding"))
+    return "nano", _fixed_point("embedding")
 
 
 def _delta_bounds(delta: DataFrame, key_col: str, payload: Column,

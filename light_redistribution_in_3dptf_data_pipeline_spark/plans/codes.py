@@ -81,28 +81,30 @@ def dequant_embedding(code: Column, scale: Column) -> Column:
                    / F.lit(L)).cast("float"))
 
 
-def code_cosine(qci_col: Column, code: Column, qsq_col: Column,
-                ndigits: int = 9) -> Column:
+def code_cosine(qci: str, qsq: str, ndigits: int = 9) -> Column:
     """Exact cosine of (full-precision query, dequantized stored
     vector) — the per-vector scale cancels (module docstring), so
-    only the raw codes participate: one exact int64 fold for the
-    dot, one for ‖q_code‖², the query norm passed in. Rounded like
-    the float probes' rerank so result rows are comparable."""
-    dot = F.aggregate(
-        F.zip_with(qci_col, code, lambda a, b: a * b.cast("bigint")),
-        F.lit(0).cast("bigint"), lambda acc, p: acc + p)
-    csq = F.aggregate(
-        F.transform(code, lambda b: (b.cast("bigint")
-                                     * b.cast("bigint"))),
-        F.lit(0).cast("bigint"), lambda acc, p: acc + p)
-    # dot ≤ 2^44 and csq ≤ 64·127² — both exactly double-representable.
-    # csq > 0 guard: an all-zero code (a stored zero vector — legal)
-    # folds to NULL cosine (ranked last), never an ANSI
-    # divide-by-zero that kills the probe
-    return F.when(csq > 0, F.round(
-        dot.cast("double")
-        / (F.sqrt(csq.cast("double"))
-           * F.sqrt(qsq_col * F.lit(1e18))), ndigits))
+    only the raw ``code`` column participates: one exact int64 fold
+    for the dot, one for ‖q_code‖², the query norm passed in. Rounded
+    like the float probes' rerank so result rows are comparable. The
+    int8 branch of ``queries.similarity.exact_cosine``, and like it one
+    SQL-text ``F.expr`` over SQL-text operands (``qci``: column name
+    or exact ``array(…L)`` literal; ``qsq``: ‖q‖²/1e18) — one
+    gateway call for the same analyzed tree a Column build pays a
+    Py4J round trip per node for, with literals spelled exactly.
+
+    dot ≤ 2^44 and csq ≤ 64·127² — both exactly double-representable.
+    csq > 0 guard: an all-zero code (a stored zero vector — legal)
+    folds to NULL cosine (ranked last), never an ANSI divide-by-zero
+    that kills the probe."""
+    dot = (f"aggregate(zip_with({qci}, code, (a, b) -> a * CAST(b AS "
+           f"BIGINT)), 0L, (acc, p) -> acc + p)")
+    csq = (f"aggregate(transform(code, b -> CAST(b AS BIGINT) * CAST(b "
+           f"AS BIGINT)), 0L, (acc, p) -> acc + p)")
+    return F.expr(
+        f"CASE WHEN {csq} > 0 THEN round(CAST({dot} AS DOUBLE) / "
+        f"(sqrt(CAST({csq} AS DOUBLE)) * sqrt({qsq} * 1e18)), "
+        f"{ndigits}) END")
 
 
 def attach_codes(delta: DataFrame, dim: int, what: str) -> DataFrame:
@@ -115,6 +117,6 @@ def attach_codes(delta: DataFrame, dim: int, what: str) -> DataFrame:
     from ..operators.similarity import _fixed_point
     from .ivf_index import _checked_dim
 
-    ci = _fixed_point(_checked_dim(F.col("embedding"), dim, what))
+    ci = _fixed_point(_checked_dim("embedding", dim, what))
     code, scale = quantize_code(ci)
     return delta.withColumn("code", code).withColumn("scale", scale)

@@ -51,6 +51,8 @@ from pyspark.sql import functions as F
 
 from ..fs import delete_path, path_exists, read_text, write_text_atomic
 from ..operators.similarity import EMB_DIM, TOP_K, _fixed_point
+from ..queries.similarity import (_dot_sql, _fixed_dot, _qdec,
+                                  exact_cosine)
 from .ann_index import _retain_vectors
 from .corpus import (BatchAlreadyIngested, _load_manifests,
                      _manifest_path, _next_seq_id, _superseded,
@@ -255,7 +257,7 @@ def init_ivf_index(spark: SparkSession, root: str, train: DataFrame,
                 f"incremental IVF root {root} is already initialized "
                 f"— the quantizer is frozen by contract (build a new "
                 f"root to re-train)")
-        ci_col = _fixed_point(_checked_dim(F.col(vec_col), dim,
+        ci_col = _fixed_point(_checked_dim(vec_col, dim,
                                            "init_ivf_index"))
         if train_normalize:
             from .kmeans import unit_fixed
@@ -283,19 +285,19 @@ def init_ivf_index(spark: SparkSession, root: str, train: DataFrame,
         return meta
 
 
-def _checked_dim(col, dim: int, what: str):
-    """Embedding column with the per-row dimensionality guard of
-    ``operators.similarity.lsh_buckets`` (ADVICE r9): ``zip_with``
-    NULL-pads a wrong-length vector, its centroid dots fold to NULL,
-    and ``max_by`` over a NULL score deterministically dumps the row
-    into the lowest cell id — stored, never probed (its re-rank
-    cosine is NULL), and invisible to the fsck because the placement
-    re-derivation NULL-folds identically. Fail loudly at execution
-    instead."""
-    return F.when(F.size(col) == dim, col).otherwise(
-        F.raise_error(F.concat(
-            F.lit(f"{what}: expected {dim}-dim embedding, got "),
-            F.size(col).cast("string"))))
+def _checked_dim(vec: str, dim: int, what: str) -> str:
+    """SQL text of the embedding ``vec`` (SQL text) with the per-row
+    dimensionality guard of ``operators.similarity.lsh_buckets``
+    (ADVICE r9): ``zip_with`` NULL-pads a wrong-length vector, its
+    centroid dots fold to NULL, and ``max_by`` over a NULL score
+    deterministically dumps the row into the lowest cell id —
+    stored, never probed (its re-rank cosine is NULL), and invisible
+    to the fsck because the placement re-derivation NULL-folds
+    identically. Fail loudly at execution instead."""
+    msg = (f"{what}: expected {dim}-dim embedding, got "
+           .replace("\\", "\\\\").replace("'", "\\'"))
+    return (f"CASE WHEN size({vec}) = {dim} THEN {vec} ELSE raise_error("
+            f"concat('{msg}', CAST(size({vec}) AS STRING))) END")
 
 
 def _cell_scores(delta: DataFrame, cents: DataFrame,
@@ -306,11 +308,9 @@ def _cell_scores(delta: DataFrame, cents: DataFrame,
     arbitrary-precision int == the hi/lo int64 fold), so placement
     and probing can never disagree. Wrong-dim rows raise per row
     (:func:`_checked_dim`) rather than mis-placing silently."""
-    from ..queries.similarity import _fixed_dot
-
     return (delta.select("vec_id",
                          _fixed_point(_checked_dim(
-                             F.col("embedding"), dim,
+                             "embedding", dim,
                              "ivf cell scoring")).alias("ci"))
             .crossJoin(F.broadcast(cents))
             .select("vec_id", "cell",
@@ -532,10 +532,10 @@ def _ivf_ingest_delta(spark: SparkSession, root: str, emb: DataFrame,
     # guarded too (its rows never pass through _cell_scores, but a
     # wrong-dim vector would still be unprobeable: NULL re-rank cosine)
     storage = meta.get("storage", "float")
-    emb_cast = F.col(vec_col).cast("array<float>")
     cols = [F.col(id_col).alias("vec_id"),
-            _checked_dim(emb_cast, meta["dim"],
-                         f"ivf_ingest_delta({batch_id})")
+            F.expr(_checked_dim(f"CAST({vec_col} AS ARRAY<FLOAT>)",
+                                meta["dim"],
+                                f"ivf_ingest_delta({batch_id})"))
             .alias("embedding")]
     if cell_col is not None:
         cols.append(F.col(cell_col).cast("bigint").alias("cell"))
@@ -681,8 +681,6 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
     Both are no-ops on roots without committed stats. OFF by
     default because on a uniform distribution the boxes are loose
     and neither threshold prunes anything."""
-    import math
-
     from .migration import resolve_probe_location
 
     root = resolve_probe_location(spark, root)
@@ -691,9 +689,7 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
     if len(query_vec) != dim:
         raise ValueError(
             f"expected {dim}-dim query vector, got {len(query_vec)}")
-    qci = [math.floor(float(x) * 1000000000.0 + 0.5)
-           for x in query_vec]
-    qsq = float(sum(c * c for c in qci)) / 1e18
+    qci, qsq = _qdec(query_vec)
 
     ranked = sorted(
         ((float(sum(int(s) * q for s, q in zip(r.csum, qci)))
@@ -740,37 +736,14 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
 def _ivf_scores(scan: DataFrame, qci: list, qsq: float,
                 exclude_id: int | None, storage: str) -> DataFrame:
     """UNSORTED exact scored rows (vec_id, cosine, cell) of an
-    already cell-pruned scan — the single scoring expression behind
-    ``_ivf_rerank`` (float) and the codes-only probe (int8),
-    factored out so the plain and the EARLY-EXIT probes rank
-    literally the same values (cellstats.early_exit_scored)."""
+    already cell-pruned scan — the shared scoring expression
+    (``queries.similarity.exact_cosine``) behind ``_ivf_rerank``
+    (float) and the codes-only probe (int8), factored out so the
+    plain and the EARLY-EXIT probes rank literally the same values
+    (cellstats.early_exit_scored)."""
     if exclude_id is not None:
         scan = scan.filter(F.col("vec_id") != exclude_id)
-    qarr = F.array(*[F.lit(c).cast("bigint") for c in qci])
-    if storage == "int8":
-        from .codes import code_cosine
-        return scan.select(
-            "vec_id",
-            code_cosine(qarr, F.col("code"), F.lit(qsq))
-            .alias("cosine"),
-            F.col("cell").cast("bigint").alias("cell"))
-    from ..queries.similarity import _fixed_dot
-
-    dec = scan.select("vec_id", "cell",
-                      _fixed_point(F.col("embedding")).alias("ci"),
-                      qarr.alias("qci"))
-    scored = dec.select(
-        "vec_id", "cell",
-        (_fixed_dot("ci", "qci").cast("double") / F.lit(1e18))
-        .alias("dot"),
-        (_fixed_dot("ci", "ci").cast("double") / F.lit(1e18))
-        .alias("nsq"))
-    # nsq > 0 guard: a stored ZERO vector is legal (cellstats module
-    # docstring) and must fold to NULL cosine (ranked last), not an
-    # ANSI DIVIDE_BY_ZERO that kills the whole probe
-    cosine = F.when(F.col("nsq") > 0, F.round(
-        F.col("dot") / (F.sqrt(F.col("nsq")) * F.sqrt(F.lit(qsq))),
-        9))
+    scored, cosine = exact_cosine(scan, qci, qsq, storage)
     return scored.select("vec_id", cosine.alias("cosine"),
                          F.col("cell").cast("bigint").alias("cell"))
 
@@ -825,38 +798,13 @@ def _ivf_rerank(scan: DataFrame, qci: list, qsq: float, k: int,
 def _ivf_batch_score(cand: DataFrame, storage: str) -> DataFrame:
     """(qid, vec_id, cosine, cell) exact per-pair scores over a
     fanned-out candidate frame carrying (qid, vec_id, cell, qci,
-    code|embedding) — the single scoring expression behind the plain
-    AND the early-exit batch probes (the batch twin of
-    :func:`_ivf_scores`)."""
-    from ..queries.similarity import _fixed_dot
-
-    if storage == "int8":
-        from .codes import code_cosine
-        return cand.select(
-            "qid", "vec_id",
-            code_cosine(
-                F.col("qci"), F.col("code"),
-                _fixed_dot("qci", "qci").cast("double") / F.lit(1e18))
-            .alias("cosine"),
-            F.col("cell").cast("bigint").alias("cell"))
-    dec = cand.select(
-        "qid", "vec_id", "cell", "qci",
-        _fixed_point(F.col("embedding")).alias("ci"))
-    rer = dec.select(
-        "qid", "vec_id", "cell",
-        (_fixed_dot("ci", "qci").cast("double") / F.lit(1e18))
-        .alias("dot"),
-        (_fixed_dot("ci", "ci").cast("double") / F.lit(1e18))
-        .alias("nsq"),
-        (_fixed_dot("qci", "qci").cast("double") / F.lit(1e18))
-        .alias("qsq"))
-    # nsq > 0: stored zero vectors fold to NULL cosine, never an
-    # ANSI divide-by-zero (see _ivf_scores)
-    cosine = F.when(F.col("nsq") > 0, F.round(
-        F.col("dot")
-        / (F.sqrt(F.col("nsq")) * F.sqrt(F.col("qsq"))), 9))
-    return rer.select("qid", "vec_id", cosine.alias("cosine"),
-                      F.col("cell").cast("bigint").alias("cell"))
+    code|embedding) — the shared scoring expression
+    (``queries.similarity.exact_cosine``) behind the plain AND the
+    early-exit batch probes (the batch twin of :func:`_ivf_scores`)."""
+    scored, cosine = exact_cosine(cand, "qci", _dot_sql("qci", "qci"),
+                                  storage)
+    return scored.select("qid", "vec_id", cosine.alias("cosine"),
+                         F.col("cell").cast("bigint").alias("cell"))
 
 
 def _ivf_batch_tail(scored: DataFrame, q: DataFrame, k: int,
@@ -943,7 +891,6 @@ def ivf_batch_topk(spark: SparkSession, root: str,
     scan (prunes more, pays a barrier)."""
     from pyspark.sql import Window
 
-    from ..queries.similarity import _fixed_dot
     from .migration import resolve_probe_location
 
     root = resolve_probe_location(spark, root)
@@ -956,7 +903,7 @@ def ivf_batch_topk(spark: SparkSession, root: str,
 
     q = queries.select(
         F.col(id_col).cast("bigint").alias("qid"),
-        _fixed_point(_checked_dim(F.col(vec_col), dim,
+        _fixed_point(_checked_dim(vec_col, dim,
                                   "ivf_batch_topk")).alias("qci"))
     # per-query cell ranking: the same mean-scaled exact-integer dot
     # as _cell_scores / the driver-side single-query ranking (both
@@ -1088,7 +1035,6 @@ def _ivf_batch_early(spark, stats, probe_all, q, k, rerank_vectors,
     the probe frame's cell union when the caller already knows it
     (the chunked path derives it driver-side) — skips one
     control-plane job."""
-    from ..queries.similarity import _fixed_dot
     from .cellstats import (bounds_frame, lower_bound_col,
                             upper_bound_col)
 
@@ -1100,7 +1046,7 @@ def _ivf_batch_early(spark, stats, probe_all, q, k, rerank_vectors,
              else k)
         p1 = probe_all.filter(F.col("rn") == 1).drop("rn")
         bf = bounds_frame(spark, stats, "cell", all_cells)
-        qsq = _fixed_dot("qci", "qci").cast("double") / F.lit(1e18)
+        qsq = F.expr(_dot_sql("qci", "qci"))
         # nz >= m + excluded (r14 ADVICE high): exclude_self removes
         # at most one stored row per query — a row nz counts but the
         # scan never scores; with nz == m exactly, only m-1 rows
@@ -1134,7 +1080,7 @@ def _ivf_batch_early(spark, stats, probe_all, q, k, rerank_vectors,
     wk = Window.partitionBy("qid").orderBy(F.desc("cosine"),
                                            F.asc("vec_id"))
     bf = bounds_frame(spark, stats, "cell", all_cells)
-    qsq = _fixed_dot("qci", "qci").cast("double") / F.lit(1e18)
+    qsq = F.expr(_dot_sql("qci", "qci"))
 
     def _tops(scored):
         # count("cosine"), not count("*") (ADVICE r13): NULL-cosine
@@ -1207,16 +1153,12 @@ def ivf_pinned_topk(spark: SparkSession, root: str, pin,
     re-runs bit-for-bit after the live index moves on. The quantizer
     is frozen by contract, so the pinned probe ranks cells against
     the same centroids the pinned vectors were placed with."""
-    import math
-
     meta = _load_meta(spark, root)
     if len(query_vec) != meta["dim"]:
         raise ValueError(
             f"expected {meta['dim']}-dim query vector, "
             f"got {len(query_vec)}")
-    qci = [math.floor(float(x) * 1000000000.0 + 0.5)
-           for x in query_vec]
-    qsq = float(sum(c * c for c in qci)) / 1e18
+    qci, qsq = _qdec(query_vec)
     ranked = sorted(
         ((float(sum(int(s) * q for s, q in zip(r.csum, qci)))
           / (r.nv * 1e18), int(r.cell))

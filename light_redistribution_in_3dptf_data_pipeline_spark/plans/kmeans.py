@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import EMB_DIM, _fixed_point
+from ..queries.similarity import _fixed_dot, _fixed_dot_sql
 from .ivf_index import CSUM_SPLIT, _checked_dim
 
 DEFAULT_ITERS = 10
@@ -195,24 +196,17 @@ def _best_cell(metric: str):
 
     Ties go to the LOWER cell id: candidates are cell-sorted and the
     fold keeps the incumbent on equality — mirroring the serve-side
-    max_by struct ordering."""
-    from ..queries.similarity import _fixed_dot
-
-    def key(c):
-        d = _fixed_dot(F.col("ci"), c["csum"],
-                       split=CSUM_SPLIT).cast("double")
-        if metric == "l2":
-            return c["m2"] - 2.0 * (d / c["nv"])
-        return -(d / (c["nv"] * F.lit(1e18)))
-
-    scored = F.transform(
-        "cents", lambda c: F.struct(key(c).alias("key"),
-                                    c["cell"].alias("cell")))
-    return F.aggregate(
-        scored,
-        F.struct(F.lit(float("inf")).alias("key"),
-                 F.lit(-1).cast("bigint").alias("cell")),
-        lambda acc, s: F.when(s["key"] < acc["key"], s).otherwise(acc))
+    max_by struct ordering. One SQL-text ``F.expr`` (the
+    ``queries.similarity._fixed_dot`` note: one gateway call, same
+    analyzed tree)."""
+    d = f"CAST({_fixed_dot_sql('ci', 'c.csum', CSUM_SPLIT)} AS DOUBLE)"
+    key = (f"c.m2 - 2.0D * ({d} / c.nv)" if metric == "l2"
+           else f"-({d} / (c.nv * 1e18))")
+    return F.expr(
+        f"aggregate(transform(cents, c -> named_struct('key', {key}, "
+        f"'cell', c.cell)), named_struct('key', double('Infinity'), "
+        f"'cell', -1L), (acc, s) -> CASE WHEN s.key < acc.key THEN s "
+        f"ELSE acc END)")
 
 
 def _badness(metric: str):
@@ -371,10 +365,7 @@ def train_centroids(spark: SparkSession, emb: DataFrame, k: int,
     if metric not in METRICS:
         raise ValueError(f"metric must be one of {METRICS}, "
                          f"got {metric!r}")
-    from ..queries.similarity import _fixed_dot
-
-    ci_col = _fixed_point(_checked_dim(F.col(vec_col), dim,
-                                       "train_centroids"))
+    ci_col = _fixed_point(_checked_dim(vec_col, dim, "train_centroids"))
     if normalize:
         ci_col = unit_fixed(ci_col)
     dec = (emb.select(

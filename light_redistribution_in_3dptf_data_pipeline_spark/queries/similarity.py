@@ -23,7 +23,7 @@ The LSH-bucketed scale path (random-hyperplane signatures) lives in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -86,27 +86,12 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which round the shortest repr in Spark but the binary value in
     # DuckDB).
     emb = load_table(spark, sf_dir, "embeddings")
-    ci = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000000.0)
-                          + F.lit(0.5)).cast("bigint"))
-    dec = emb.select("vec_id", ci.alias("v"))
-    dec = dec.withColumn(
-        "nsq", _fixed_dot("v", "v").cast("double") / F.lit(1e18))
-    q = (dec.filter(F.col("vec_id") == QUERY_VEC_ID)
-            .select(F.col("v").alias("qv"),
-                    F.col("nsq").alias("qsq")))
-    scored = (dec.filter(F.col("vec_id") != QUERY_VEC_ID)
-                 .crossJoin(F.broadcast(q))
-                 .select("vec_id",
-                         (_fixed_dot("v", "qv").cast("double")
-                          / F.lit(1e18)).alias("dot"),
-                         "nsq", "qsq"))
-    cosine = F.round(F.col("dot")
-                     / (F.sqrt(F.col("nsq")) * F.sqrt(F.col("qsq"))), 12)
+    scored, cosine = exact_cosine(
+        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
+           .crossJoin(F.broadcast(_query_row(emb, QUERY_VEC_ID))),
+        "qci", "qsq", ndigits=12)
     return (scored.select("vec_id", cosine.alias("cosine"),
-                          F.round(F.sqrt(F.col("nsq")), 12)
-                           .alias("l2_norm"))
+                          F.round(F.sqrt("_nsq"), 12).alias("l2_norm"))
                   .orderBy(F.desc("cosine"), F.asc("vec_id"))
                   .limit(TOP_K))
 
@@ -114,9 +99,44 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEARDUP_TOP_PAIRS = 20
 
 
-def _fixed_dot(x, y, split: int = 1 << 10):
+# The exact-arithmetic kit below is authored as SQL TEXT, not as
+# per-element Column calls: each ``F.expr`` is ONE gateway call that
+# the JVM parses into the same analyzed tree the Column API would
+# build, whereas the Column form pays a Py4J round trip for every
+# literal, cast, lambda and operator — thousands per single-probe
+# DataFrame, more driver time than the probe's own scan takes.
+# Literals are spelled exactly: int64 components as ``…L`` and
+# doubles as ``repr(float)`` + ``D`` (the shortest round-trip form,
+# parsed back to the identical double).
+
+def _fixed_point(vec: str) -> Column:
+    """float components → exact BIGINT nano-units
+    ``floor(x·1e9 + 0.5)`` (|c| ≤ ~10 ⇒ a 64-term signed sum stays
+    far below 2^63 — overflow-free). ``vec`` is SQL text: a column
+    name or an array expression."""
+    return F.expr(f"transform({vec}, x -> CAST(floor(CAST(x AS DOUBLE)"
+                  f" * 1e9 + 0.5D) AS BIGINT))")
+
+
+def _fixed_dot_sql(x: str, y: str, split: int = 1 << 10) -> str:
+    """SQL text of :func:`_fixed_dot` over the SQL texts ``x``/``y``
+    (column names, lambda fields or array literals) — for callers
+    that nest the fold inside a larger expression."""
+    def fold(term: str) -> str:
+        return (f"aggregate(zip_with({x}, {y}, (a, b) -> {term}), 0L, "
+                f"(acc, p) -> acc + p)")
+
+    lo = fold(f"a * pmod(b, {split})")
+    hi = fold(f"a * CAST((b - pmod(b, {split})) / {split} AS BIGINT)")
+    return (f"(CAST({hi} AS DECIMAL(38,0)) * {split} "
+            f"+ CAST({lo} AS DECIMAL(38,0)))")
+
+
+def _fixed_dot(x: str, y: str, split: int = 1 << 10) -> Column:
     """Exact integer dot product of two int64 component arrays, as a
-    DECIMAL(38,0) column.
+    DECIMAL(38,0) column, built as one SQL-text ``F.expr`` (see the
+    note above :func:`_fixed_point`: one gateway call instead of a
+    Py4J round trip per lambda and operator; same analyzed tree).
 
     The naive fold overflows int64 (nano-unit components reach 2^31,
     so a single product reaches 2^62), and a BigDecimal fold is ~10×
@@ -126,16 +146,77 @@ def _fixed_dot(x, y, split: int = 1 << 10):
     ``split`` so both folds fit: with d ≤ 64 terms and |x| < 2^31,
     needs split ≤ 2^25 and |y| < split·2^25. Defaults suit per-vector
     nano-components (|y| < 2^31, split 2^10)."""
-    lo_sum = F.aggregate(
-        F.zip_with(x, y, lambda a, b: a * F.pmod(b, F.lit(split))),
-        F.lit(0).cast("bigint"), lambda acc, p: acc + p)
-    hi_sum = F.aggregate(
-        F.zip_with(x, y,
-                   lambda a, b: a * ((b - F.pmod(b, F.lit(split)))
-                                     / F.lit(split)).cast("bigint")),
-        F.lit(0).cast("bigint"), lambda acc, p: acc + p)
-    return (hi_sum.cast("decimal(38,0)") * F.lit(split)
-            + lo_sum.cast("decimal(38,0)"))
+    return F.expr(_fixed_dot_sql(x, y, split))
+
+
+def _dot_sql(x: str, y: str) -> str:
+    """The exact nano-unit dot of ``x``·``y`` back in embedding units
+    (÷1e18) as a DOUBLE — the dot, ‖v‖² and ‖q‖² of every cosine."""
+    return f"CAST({_fixed_dot_sql(x, y)} AS DOUBLE) / 1e18"
+
+
+def _qdec(query_vec: list) -> "tuple[list, float]":
+    """(qci, qsq): the nano-unit fixed-point decode of a driver-side
+    query vector plus its ‖q‖²/1e18 — Python floats are the same IEEE
+    doubles as :func:`_fixed_point`, Python ints exact."""
+    import math
+
+    qci = [math.floor(float(x) * 1000000000.0 + 0.5)
+           for x in query_vec]
+    return qci, float(sum(c * c for c in qci)) / 1e18
+
+
+def _query_row(emb: DataFrame, query_id: int) -> DataFrame:
+    """(qci, qsq) of the stored vector ``query_id`` — the one-row
+    broadcast query side of the brute-force and one-shot searches."""
+    return (emb.filter(F.col("vec_id") == query_id)
+            .select(_fixed_point("embedding").alias("qci"))
+            .select("qci", F.expr(_dot_sql("qci", "qci")).alias("qsq")))
+
+
+def exact_cosine(frame: DataFrame, qci, qsq, storage: str = "float",
+                 ndigits: int = 9) -> "tuple[DataFrame, Column]":
+    """The engine's ONE exact-cosine scoring expression: (``frame``
+    staged for scoring, the cosine column to select from it). Every
+    probe path — incremental, pinned, batch and one-shot, float and
+    int8 — scores through it.
+
+    Every piece is SQL text (see the note above :func:`_fixed_point`):
+    a handful of gateway calls per probe instead of a Py4J round trip
+    per literal and lambda node, for the same analyzed tree, with the
+    query entering as exact literals rather than 64 ``lit().cast()``
+    calls. ``qci``/``qsq`` are the query's nano-unit components and
+    ‖q‖²/1e18: SQL text (column names or expressions), or driver
+    values from :func:`_qdec`, which enter as exact literals
+    (``array(…L)`` and ``repr(float)`` + ``D``).
+
+    - ``float``: the stored ``embedding`` decodes to ``_ci``
+      (:func:`_fixed_point`), then ``_dot`` and ``_nsq`` fold exactly
+      (:func:`_fixed_dot`), then ``round(_dot / (√_nsq·√qsq),
+      ndigits)``, in three projections so each fold runs once per
+      row (Catalyst does not inline a fold referenced twice).
+    - ``int8``: the scale-free code cosine over ``code``
+      (``plans/codes.code_cosine``).
+
+    Either way a stored ZERO vector — legal — scores a NULL cosine,
+    ranked last under ``desc``, never an ANSI DIVIDE_BY_ZERO that
+    kills the query. The staged frame keeps every input column (plus
+    ``_ci``/``_dot``/``_nsq`` for float); unused ones are pruned by
+    the optimizer."""
+    if not isinstance(qci, str):
+        qci = "array(" + ", ".join(f"{int(c)}L" for c in qci) + ")"
+    if not isinstance(qsq, str):
+        qsq = f"{float(qsq)!r}D"
+    if storage == "int8":
+        from ..plans.codes import code_cosine
+        return frame, code_cosine(qci, qsq, ndigits)
+    scored = (frame.select("*", _fixed_point("embedding").alias("_ci"))
+              .select("*", F.expr(_dot_sql("_ci", qci)).alias("_dot"),
+                      F.expr(_dot_sql("_ci", "_ci")).alias("_nsq")))
+    return scored, F.expr(
+        f"CASE WHEN _nsq > 0 THEN round(_dot / (sqrt(_nsq) "
+        f"* sqrt({qsq})), {ndigits}) END")
+
 
 # Fixed-point trick (same discipline as SIM34_ORACLE below): components
 # become exact integer nano-units; every dot product is an exact integer
@@ -204,13 +285,8 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    ci = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000000.0)
-                           + F.lit(0.5)).cast("bigint"))
-    dec = emb.select("vec_id", "label", ci.alias("v"))
-    dec = dec.withColumn(
-        "n2", _fixed_dot("v", "v").cast("double") / F.lit(1e18))
+    dec = emb.select("vec_id", "label", _fixed_point("embedding").alias("v"))
+    dec = dec.withColumn("n2", F.expr(_dot_sql("v", "v")))
 
     # Per-bucket all-pairs dots as ONE vectorized int64 matmul per
     # label group (applyInPandas): exact via the same hi/lo split
@@ -327,11 +403,8 @@ WHERE r.rn = 1
 def ivf_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # per-vector fixed-point component array (nano-units, exact BIGINT)
-    ci = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000000.0)
-                           + F.lit(0.5)).cast("bigint"))
-    vecs = emb.select("vec_id", "label", ci.alias("ci"))
+    vecs = emb.select("vec_id", "label",
+                      _fixed_point("embedding").alias("ci"))
 
     # IVF train: one wide aggregate — d BIGINT sums + the count.
     # (The d sum columns are unavoidable aggregate expressions, but
@@ -433,12 +506,8 @@ ORDER BY vec_id
 def quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     L = QUANT_LEVELS
-    ci = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000000.0)
-                           + F.lit(0.5)).cast("bigint"))
     m = F.array_max(F.transform("ci", lambda x: F.abs(x)))
-    df = (emb.select("vec_id", ci.alias("ci"))
+    df = (emb.select("vec_id", _fixed_point("embedding").alias("ci"))
           .withColumn("max_abs_nano", m))
     q = F.transform(
         "ci",

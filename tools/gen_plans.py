@@ -473,7 +473,7 @@ def main() -> None:
     dec = (emb.select(
         "vec_id", F.col("embedding").cast("array<float>")
         .alias("embedding"),
-        _fixed_point(_checked_dim(F.col("embedding"), 64,
+        _fixed_point(_checked_dim("embedding", 64,
                                   "plan-audit")).alias("ci"))
         .withColumn("x2", _fixed_dot("ci", "ci")).localCheckpoint())
     # the 64 component sums + the max_by struct exceed the default
