@@ -444,13 +444,10 @@ def main() -> None:
         qvec_c = [float(x) for x in
                   clu.filter("vec_id = 0").select("embedding")
                   .head()[0]]
-        # early_exit=True is BOX mode since r14 (zero-job bound —
-        # must read ≤ the plain leg on this idle session). The r13/r14
-        # *_seed headline legs are RETIRED (r14 VERDICT #8): the
-        # opt-in two-phase mode's cost model is recorded in
-        # EE_COSTMODEL_r14.json and stays measurable on demand via
-        # tools/profile_ee_sf1.py — re-measuring a known number cost
-        # 1.7 s of headline wall every round.
+        # early_exit=True is the zero-job box bound — it must read
+        # ≤ the plain leg on this idle session. The two-phase seed
+        # modes are gone: EE_COSTMODEL_r14/r15.json measured them
+        # slower than both plain and box probes.
         for fam, probe in (
                 ("ivf8_np4_topk",
                  lambda: ivf_incremental_topk(

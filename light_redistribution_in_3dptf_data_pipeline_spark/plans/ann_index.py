@@ -794,7 +794,7 @@ def ann_incremental_topk(spark: SparkSession, root: str,
                          hamming: int = 1,
                          rerank_vectors: DataFrame | None = None,
                          rerank_cut: int = 4,
-                         early_exit: "bool | str" = False,
+                         early_exit: bool = False,
                          probe_buckets: int | None = None
                          ) -> DataFrame:
     """Top-k cosine over the COMMITTED index: probe set (query bucket
@@ -814,12 +814,9 @@ def ann_incremental_topk(spark: SparkSession, root: str,
     ``early_exit=True`` (r12 brief #1; reshaped r14): skip probed
     buckets whose direction-box upper bound (plans/cellstats)
     provably cannot reach the top-k — rows identical by the bound's
-    soundness (test-pinned). ``True``/``"box"`` uses the own
-    bucket's box LOWER bound as a zero-job threshold (never slower
-    than the plain probe, idle or busy); ``"seed"`` is the r13
-    measured-threshold two-phase shape (maximal pruning; pays under
-    constrained task slots, ~2× wall on an idle session) — the full
-    cost model lives on ``ivf_incremental_topk``'s docstring.
+    soundness (test-pinned). The own bucket's box LOWER bound is the
+    zero-job threshold (never slower than the plain probe, idle or
+    busy).
 
     ``probe_buckets=N`` (r12 brief #7) replaces the Hamming-ball
     fan-out with the MARGIN-RANKED multi-probe sequence
@@ -846,10 +843,9 @@ def ann_incremental_topk(spark: SparkSession, root: str,
     # bucket filters below (early-exit kept-sets, the plain IN) keep
     # their semantics within it
     scan = read_ann_buckets(spark, root, probes)
-    from .cellstats import normalize_mode
-    ee_mode = normalize_mode(early_exit)
+    from .cellstats import check_early_exit
     stats = None
-    if ee_mode and len(probes) > 1:
+    if check_early_exit(early_exit) and len(probes) > 1:
         from .cellstats import load_stats, payload_column
         stats = load_stats(spark, root)
         if stats is not None and \
@@ -864,7 +860,6 @@ def ann_incremental_topk(spark: SparkSession, root: str,
         scored, _ = early_exit_scored(
             stats, scan, "bucket", probes, qci, qsq, m,
             lambda s: _ann_scores(s, qci, qsq, exclude_id, storage),
-            mode=ee_mode,
             excluded=0 if exclude_id is None else 1)
         if nt > 1:   # one row per vector ACROSS the probed tables
             scored = _dedup_tables(scored)
@@ -977,7 +972,7 @@ def ann_batch_topk(spark: SparkSession, root: str,
                    max_queries_per_job: int | None = None,
                    rerank_vectors: DataFrame | None = None,
                    rerank_cut: int = 4,
-                   early_exit: "bool | str" = False,
+                   early_exit: bool = False,
                    chunk_concurrency: int = 1,
                    probe_buckets: int | None = None) -> DataFrame:
     """Top-k cosine for MANY queries in ONE job — the LSH side of
@@ -1011,9 +1006,8 @@ def ann_batch_topk(spark: SparkSession, root: str,
     posting-list pruning from the direction-box stats — each
     query's non-own probe buckets drop when their box bound
     provably cannot reach that query's top-k; rows identical
-    (test-pinned), same two modes and shape as
-    ``ivf_index._ivf_batch_early`` (``"box"`` = zero-job own-bucket
-    floor, ``"seed"`` = measured threshold with a barrier).
+    (test-pinned), same shape as ``ivf_index._ivf_batch_early``
+    (zero-job own-bucket box floor).
 
     ``probe_buckets=N`` (r14 — the batch form of the single-query
     margin-ranked multi-probe): each query's N cheapest boundary
@@ -1065,14 +1059,14 @@ def ann_batch_topk(spark: SparkSession, root: str,
     probe = probe_all.drop("m")
 
     storage = meta.get("storage", "float")
-    from .cellstats import normalize_mode
-    ee_mode = normalize_mode(early_exit)
+    from .cellstats import check_early_exit
     stats = None
     # gate on the EFFECTIVE per-query probe count (r14 ADVICE low):
     # a multi-table root fans nt buckets per query even at hamming=0,
     # so there is something to prune whenever masks × tables > 1
-    if ee_mode and (len(masks) * nt > 1 if probe_buckets is None
-                    else probe_buckets > 1):
+    if check_early_exit(early_exit) and (
+            len(masks) * nt > 1 if probe_buckets is None
+            else probe_buckets > 1):
         from .cellstats import load_stats, payload_column
         stats = load_stats(spark, root)
         if stats is not None and \
@@ -1119,7 +1113,7 @@ def ann_batch_topk(spark: SparkSession, root: str,
                     part = _ann_batch_early(
                         spark, stats, pa, dq, k, rerank_vectors,
                         rerank_cut, storage, _fanout, _buckets_of,
-                        ee_mode, dedup=nt > 1, num_planes=num_planes,
+                        dedup=nt > 1,
                         excluded=1 if exclude_self else 0,
                         all_buckets=buckets)
                 else:
@@ -1136,8 +1130,8 @@ def ann_batch_topk(spark: SparkSession, root: str,
     if stats is not None:
         return _ann_batch_early(spark, stats, probe_all, dec_q, k,
                                 rerank_vectors, rerank_cut, storage,
-                                _fanout, _buckets_of, ee_mode,
-                                dedup=nt > 1, num_planes=num_planes,
+                                _fanout, _buckets_of,
+                                dedup=nt > 1,
                                 excluded=1 if exclude_self else 0)
     scored = _ann_batch_score(_fanout(probe, _buckets_of(probe)),
                               storage)
@@ -1147,21 +1141,16 @@ def ann_batch_topk(spark: SparkSession, root: str,
 
 def _ann_batch_early(spark, stats, probe_all, dec_q, k,
                      rerank_vectors, rerank_cut, storage, fanout,
-                     buckets_of, mode="box", dedup=False,
-                     num_planes=NUM_PLANES, excluded=0,
+                     buckets_of, dedup=False, excluded=0,
                      all_buckets=None):
     """The LSH batch early exit — structurally
     ``ivf_index._ivf_batch_early`` with (bucket, flip mask) in place
     of (cell, rank): the threshold key is each query's OWN bucket
-    (mask 0). ``mode="box"`` derives per-query floors from the own
-    bucket's box (zero-job, never slower); ``mode="seed"``
-    materializes the own-bucket top-m and prunes against the
-    measured m-th cosine. Soundness and the row-for-row parity pin
-    are the same argument as the IVF twin. ``all_buckets``: the
-    probe frame's bucket union when the caller already collected it
-    (the chunked path) — skips one control-plane job."""
-    from pyspark.sql import Window
-
+    (mask 0), whose box gives a per-query floor (zero-job, never
+    slower). Soundness and the row-for-row parity pin are the same
+    argument as the IVF twin. ``all_buckets``: the probe frame's
+    bucket union when the caller already collected it (the chunked
+    path) — skips one control-plane job."""
     from .cellstats import (bounds_frame, lower_bound_col,
                             upper_bound_col)
 
@@ -1169,97 +1158,33 @@ def _ann_batch_early(spark, stats, probe_all, dec_q, k,
          if storage == "int8" and rerank_vectors is not None else k)
     if all_buckets is None:
         all_buckets = buckets_of(probe_all)
-    if mode == "box":
-        p1 = probe_all.filter(F.col("m") == 0).drop("m")
-        bf = bounds_frame(spark, stats, "bucket", all_buckets)
-        # nz >= m + excluded (r14 ADVICE high): exclude_self removes
-        # at most one nz-counted row per query from scoring — demand
-        # one extra box witness (see the IVF twin's note).
-        lq = (p1.join(F.broadcast(dec_q), "qid")
-              .join(F.broadcast(bf), "bucket", "left")
-              .select("qid",
-                      F.when(F.col("nz") >= m + excluded,
-                             lower_bound_col(F.col("qci"),
-                                             F.col("qsq")))
-                      .alias("_L"))
-              .filter(F.col("_L").isNotNull()))
-        rest = probe_all.filter(F.col("m") != 0).drop("m")
-        survivors = (rest.join(F.broadcast(dec_q), "qid")
-                     .join(F.broadcast(bf), "bucket", "left")
-                     .join(F.broadcast(lq), "qid", "left")
-                     .withColumn("_ub",
-                                 upper_bound_col(F.col("qci"),
-                                                 F.col("qsq")))
-                     .filter(F.col("_L").isNull()
-                             | F.col("dmin").isNull()
-                             | (F.col("_ub") >= F.col("_L")))
-                     .select("qid", "bucket"))
-        pairs = p1.unionByName(survivors)
-        scored = _ann_batch_score(fanout(pairs, buckets_of(pairs)),
-                                  storage)
-        return _ann_batch_tail(scored, dec_q, k, rerank_vectors,
-                               rerank_cut, storage, dedup=dedup)
-    wk = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                           F.asc("vec_id"))
-    bf = bounds_frame(spark, stats, "bucket", all_buckets)
-
-    def _tops(scored):
-        # count("cosine"), not count("*") (ADVICE r13): NULL-cosine
-        # seed rows would inflate the >= m gate while min() skips
-        # them — an overestimated L that wrongly prunes (see the
-        # IVF twin's note)
-        return (scored.groupBy("qid")
-                .agg(F.count("cosine").alias("_n"),
-                     F.min("cosine").alias("_L"))
-                .filter(F.col("_n") >= m).select("qid", "_L"))
-
-    def _prune(pairs, lq):
-        return (pairs.join(F.broadcast(dec_q), "qid")
-                .join(F.broadcast(bf), "bucket", "left")
-                .join(F.broadcast(lq), "qid", "left")
-                .withColumn("_ub", upper_bound_col(F.col("qci"),
-                                                   F.col("qsq")))
-                .filter(F.col("_L").isNull()
-                        | F.col("dmin").isNull()
-                        | (F.col("_ub") >= F.col("_L")))
-                .select("qid", "bucket"))
-
     p1 = probe_all.filter(F.col("m") == 0).drop("m")
-    scored = (_ann_batch_score(fanout(p1, buckets_of(p1)), storage)
-              .withColumn("rn", F.row_number().over(wk))
-              .filter(F.col("rn") <= m).drop("rn")
-              .localCheckpoint())
-    lq = _tops(scored)
-    rest_pred = F.col("m") != 0
-    if mode == "seed2":
-        # ITERATIVE TIGHTENING (r13 VERDICT #7): the Hamming-band
-        # ladder — score the 1-flip band (plus other tables' own
-        # buckets, whose within-table mask is also ≤ 1 bit), itself
-        # pruned by the seed threshold first; re-measure each
-        # query's m-th over seed ∪ band; prune the farther bands
-        # against the strictly-tighter value. The within-table flip
-        # count is bit_count(m & (2^J − 1)) — the bits above J are
-        # table routing, not distance.
-        band = F.bit_count(
-            F.col("m").bitwiseAND(F.lit((1 << num_planes) - 1)))
-        band2 = _prune(
-            probe_all.filter(rest_pred & (band <= 1)).drop("m"),
-            lq).localCheckpoint()
-        b2 = buckets_of(band2)
-        if b2:
-            scored = (scored.unionByName(
-                _ann_batch_score(fanout(band2, b2), storage))
-                .withColumn("rn", F.row_number().over(wk))
-                .filter(F.col("rn") <= m).drop("rn")
-                .localCheckpoint())
-            lq = _tops(scored)
-        rest_pred = rest_pred & (band > 1)
-    rest = probe_all.filter(rest_pred).drop("m")
-    survivors = _prune(rest, lq).localCheckpoint()
-    buckets2 = buckets_of(survivors)
-    if buckets2:
-        scored = scored.unionByName(
-            _ann_batch_score(fanout(survivors, buckets2), storage))
+    bf = bounds_frame(spark, stats, "bucket", all_buckets)
+    # nz >= m + excluded (r14 ADVICE high): exclude_self removes
+    # at most one nz-counted row per query from scoring — demand
+    # one extra box witness (see the IVF twin's note).
+    lq = (p1.join(F.broadcast(dec_q), "qid")
+          .join(F.broadcast(bf), "bucket", "left")
+          .select("qid",
+                  F.when(F.col("nz") >= m + excluded,
+                         lower_bound_col(F.col("qci"),
+                                         F.col("qsq")))
+                  .alias("_L"))
+          .filter(F.col("_L").isNotNull()))
+    rest = probe_all.filter(F.col("m") != 0).drop("m")
+    survivors = (rest.join(F.broadcast(dec_q), "qid")
+                 .join(F.broadcast(bf), "bucket", "left")
+                 .join(F.broadcast(lq), "qid", "left")
+                 .withColumn("_ub",
+                             upper_bound_col(F.col("qci"),
+                                             F.col("qsq")))
+                 .filter(F.col("_L").isNull()
+                         | F.col("dmin").isNull()
+                         | (F.col("_ub") >= F.col("_L")))
+                 .select("qid", "bucket"))
+    pairs = p1.unionByName(survivors)
+    scored = _ann_batch_score(fanout(pairs, buckets_of(pairs)),
+                              storage)
     return _ann_batch_tail(scored, dec_q, k, rerank_vectors,
                            rerank_cut, storage, dedup=dedup)
 

@@ -83,27 +83,14 @@ def _stats_path(root: str) -> str:
     return f"{root}/{STATS_NAME}"
 
 
-def normalize_mode(early_exit) -> "str | None":
-    """The probes' shared ``early_exit`` knob → internal mode:
-    False → None (off), True/"box" → "box" (zero-job box floor,
-    never slower than plain — the r14 default), "seed" → the r13
-    two-phase measured threshold (maximal pruning; pays only under
-    constrained task slots), "seed2" → seed plus ONE iterative
-    re-tightening round (r13 VERDICT #7): the BATCH probes score the
-    rank-2 band against the seed threshold, re-measure each query's
-    m-th, and prune the remaining bands against the strictly-tighter
-    value — single-query probes treat it as "seed" (their threshold
-    already comes from the best cell's true top-m; the batch shape
-    is where band-at-a-time tightening has bands to spend)."""
-    if early_exit is False or early_exit is None:
-        return None
-    if early_exit is True or early_exit == "box":
-        return "box"
-    if early_exit in ("seed", "seed2"):
-        return early_exit
-    raise ValueError(
-        f"early_exit must be False, True, 'box', 'seed' or 'seed2', "
-        f"got {early_exit!r}")
+def check_early_exit(early_exit) -> bool:
+    """The probes' shared ``early_exit`` knob: a bool. True prunes
+    probed keys by the zero-job box floor (never slower than plain);
+    False is the plain probe."""
+    if not isinstance(early_exit, bool):
+        raise ValueError(
+            f"early_exit must be True or False, got {early_exit!r}")
+    return early_exit
 
 
 def _direction(payload: Column) -> Column:
@@ -163,7 +150,7 @@ def _delta_bounds(delta: DataFrame, key_col: str, payload: Column,
     widen hook taxed EVERY ingest ~0.7–3.5 s (the r13 ``weak`` mark:
     builder sf1 ivf_ingest 2.43 → 5.89 s). The numpy fold does the
     identical IEEE-double arithmetic ~7× faster end-to-end (measured
-    tools/profile_bounds5.py: 0.4–0.55 s vs 1.0–3.1 s), and any
+    r13 on the widen hook alone: 0.4–0.55 s vs 1.0–3.1 s), and any
     summation-order difference (numpy pairwise vs JVM sequential
     fold, ≤ ~1e-15 relative) is absorbed by EPS_COMPONENT's 1e-9
     widening — six orders of magnitude of slack, so the stored box
@@ -658,95 +645,36 @@ def lower_bound_col(qci: Column, qsq: Column) -> Column:
 def early_exit_scored(stats: dict, scan: DataFrame, key_col: str,
                       probe_keys: "list[int]", qci: list, qsq: float,
                       m: int, score_fn,
-                      mode: str = "box",
                       excluded: int = 0) -> "tuple[DataFrame, list]":
     """The SINGLE-QUERY early-exit candidate frame: a scored frame
     whose top-m rows under (cosine desc, vec_id asc) equal the full
     probed scan's top-m.
 
-    ``mode="box"`` (the default since r14 — VERDICT r13 #2): the
-    threshold is the SEED KEY'S OWN BOX lower bound
+    The threshold is the SEED KEY'S OWN BOX lower bound
     (:func:`box_prune_keys`) — pure driver arithmetic over the stats
     file, so the plan is ONE scan with a (possibly) smaller literal
     IN-list and early exit is never slower than the plain probe,
     idle cluster or busy. On tightly clustered data the box floor
-    sits just under the true in-cluster kth, so it prunes the same
-    separated cells the seeded threshold does; what it cannot prune
-    is the marginal cell whose bound falls between the box floor and
-    the true kth.
-
-    ``mode="seed"`` (the r13 shape — maximal pruning for constrained
-    task slots): first the free box prune, then
-
-    1. **seed**: score the FIRST probed key only (the query's own
-       nearest cell / own bucket — where the true neighbors
-       concentrate) and COLLECT its top-m to the driver — ≤ m rows
-       via the TakeOrderedAndProject fast path (per-partition top-m,
-       driver merge; a localCheckpoint here would degrade the
-       sort+limit plan to a full global sort of the seed list —
-       measured 4× the collect at 200k-row cells), re-literalized as
-       a tiny DataFrame;
-    2. **L** = the seed's m-th cosine (already on the driver) —
-       ≥ the box floor, so it prunes a superset of the box prune.
-       Fewer than m non-null seed cosines → no further pruning;
-    3. **prune**: drop every remaining key whose box upper bound
-       (:func:`upper_bound`, already slack-widened) is < L — every
-       row it holds scores strictly below m rows we already have,
-       so the global top-m cannot contain it;
-    4. **union**: seed ∪ the surviving keys' scores (ONE more scan
-       with a literal smaller IN-list).
-
-    The seed collect is a synchronous driver barrier and a second
-    sequential job: on an IDLE cluster it DOUBLES probe wall while
-    cutting task-seconds ~4× (the r13 cost model) — which is why
-    "box" is the default and "seed" the opt-in.
+    sits just under the true in-cluster kth, so it prunes the
+    separated cells; what it cannot prune is the marginal cell whose
+    bound falls between the box floor and the true kth.
 
     Returns (scored frame, pruned keys). ``score_fn`` maps an
     already key-filtered scan to UNSORTED (vec_id, cosine, …) rows
     — the same expression the plain probe ranks, so parity is by
-    construction (test-pinned row-for-row at every fan-out, both
-    modes)."""
+    construction (test-pinned row-for-row at every fan-out)."""
     spark = scan.sparkSession
-    if mode == "seed2":
-        mode = "seed"   # single-query: see normalize_mode
     ents = get_entries(spark, stats, [int(k) for k in probe_keys])
     prefetched = {"format": "json", "payload": stats["payload"],
                   "keys": ents}
     kept, pruned = box_prune_keys(prefetched, probe_keys, qci, qsq,
                                   m, excluded=excluded)
-    if mode == "box":
-        if not pruned:
-            # nothing proved prunable: the plain single-scan plan
-            return score_fn(
-                scan.filter(F.col(key_col).isin(
-                    [int(c) for c in probe_keys]))), []
-        return score_fn(scan.filter(F.col(key_col).isin(kept))), \
-            pruned
-
-    seed_key = int(probe_keys[0])
-    seed_scored = score_fn(scan.filter(F.col(key_col) == seed_key))
-    seed_rows = (seed_scored
-                 .orderBy(F.desc("cosine"), F.asc("vec_id"))
-                 .limit(m).collect())
-    seed = spark.createDataFrame(seed_rows, seed_scored.schema)
-    cosines = sorted((float(r.cosine) for r in seed_rows
-                      if r.cosine is not None), reverse=True)
-    rest = [c for c in kept if c != seed_key]
-    if len(cosines) >= m:
-        L = cosines[m - 1]
-        keep = []
-        for c in rest:
-            ent = ents.get(str(c))
-            if ent is not None and upper_bound(qci, qsq, ent) < L:
-                pruned.append(c)
-            else:
-                keep.append(c)
-        rest = keep
-    if not rest:
-        return seed, pruned
-    return (seed.unionByName(
-        score_fn(scan.filter(F.col(key_col).isin(rest)))),
-        pruned)
+    if not pruned:
+        # nothing proved prunable: the plain single-scan plan
+        return score_fn(
+            scan.filter(F.col(key_col).isin(
+                [int(c) for c in probe_keys]))), []
+    return score_fn(scan.filter(F.col(key_col).isin(kept))), pruned
 
 
 def verify_stats(spark: SparkSession, root: str, scan: DataFrame,

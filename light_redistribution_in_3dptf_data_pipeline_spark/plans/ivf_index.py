@@ -631,7 +631,7 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
                          exclude_id: int | None = None,
                          rerank_vectors: DataFrame | None = None,
                          rerank_cut: int = 4,
-                         early_exit: "bool | str" = False
+                         early_exit: bool = False
                          ) -> DataFrame:
     """Top-k cosine over the COMMITTED index: rank cells DRIVER-SIDE
     against the frozen centroids (exact arbitrary-precision integer
@@ -659,26 +659,14 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
     #2) SKIPS probed cells whose direction-box upper bound
     (plans/cellstats) provably cannot reach the top-k — result rows
     are IDENTICAL by the bound's soundness (test-pinned at every
-    fan-out); the win is the skipped posting lists' SCAN WORK. Two
-    modes:
+    fan-out); the win is the skipped posting lists' SCAN WORK. The
+    threshold is the seed cell's own box LOWER bound — pure driver
+    arithmetic over the stats sidecar, ZERO extra jobs, so the
+    early-exit plan is the plain plan with a (possibly) smaller
+    literal IN-list: never slower, idle or busy. On the clustered
+    bench fixture it prunes 3 of 4 separated cells.
 
-    - ``True`` / ``"box"`` (default mode): the threshold is the
-      seed cell's own box LOWER bound — pure driver arithmetic over
-      the stats sidecar, ZERO extra jobs, so the early-exit plan is
-      the plain plan with a (possibly) smaller literal IN-list:
-      never slower, idle or busy. On the clustered bench fixture it
-      prunes the same 3-of-4 separated cells the seeded threshold
-      does.
-    - ``"seed"``: the r13 two-phase shape — box prune first, then
-      score the seed cell, collect its top-m (one driver
-      round-trip, a second sequential job), and prune against the
-      MEASURED m-th cosine, which is ≥ the box floor and prunes a
-      superset. Cost model (measured r13): task-seconds ~4× down;
-      wall 2.6× down under CONSTRAINED slots (local[4]) but ~2×
-      UP on an idle local[32] (the seed barrier) — use it when the
-      cluster is busy and the box floor alone is too loose.
-
-    Both are no-ops on roots without committed stats. OFF by
+    A no-op on roots without committed stats. OFF by
     default because on a uniform distribution the boxes are loose
     and neither threshold prunes anything."""
     from .migration import resolve_probe_location
@@ -704,10 +692,9 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
     # inner cell filters (early-exit kept-sets, the plain IN) keep
     # their semantics within it
     scan = read_ivf_cells(spark, root, probe_cells)
-    from .cellstats import normalize_mode
-    ee_mode = normalize_mode(early_exit)
+    from .cellstats import check_early_exit
     stats = None
-    if ee_mode and len(probe_cells) > 1:
+    if check_early_exit(early_exit) and len(probe_cells) > 1:
         from .cellstats import load_stats, payload_column
         stats = load_stats(spark, root)
         if stats is not None and \
@@ -720,7 +707,6 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
         scored, _ = early_exit_scored(
             stats, scan, "cell", probe_cells, qci, qsq, m,
             lambda s: _ivf_scores(s, qci, qsq, exclude_id, storage),
-            mode=ee_mode,
             excluded=0 if exclude_id is None else 1)
     else:
         scored = _ivf_scores(
@@ -840,7 +826,7 @@ def ivf_batch_topk(spark: SparkSession, root: str,
                    max_queries_per_job: int | None = None,
                    rerank_vectors: DataFrame | None = None,
                    rerank_cut: int = 4,
-                   early_exit: "bool | str" = False,
+                   early_exit: bool = False,
                    chunk_concurrency: int = 1) -> DataFrame:
     """Top-k cosine for MANY queries in ONE job — the eval/serving
     shape :func:`recall.measure_recall`'s docstring defers to: a
@@ -885,10 +871,8 @@ def ivf_batch_topk(spark: SparkSession, root: str,
     posting-list pruning from the direction-box stats — see
     :func:`_ivf_batch_early`; rows identical, the win is every
     (qid, cell) pair whose best-possible cosine provably cannot
-    reach that query's top-k. ``True``/``"box"`` derives the
-    threshold from each query's rank-1 cell box (zero extra jobs,
-    never slower); ``"seed"`` measures it from a materialized seed
-    scan (prunes more, pays a barrier)."""
+    reach that query's top-k. The threshold derives from each
+    query's rank-1 cell box (zero extra jobs, never slower)."""
     from pyspark.sql import Window
 
     from .migration import resolve_probe_location
@@ -923,10 +907,9 @@ def ivf_batch_topk(spark: SparkSession, root: str,
     probe = probe_all.drop("rn")
 
     storage = meta.get("storage", "float")
-    from .cellstats import normalize_mode
-    ee_mode = normalize_mode(early_exit)
+    from .cellstats import check_early_exit
     stats = None
-    if ee_mode and nprobe > 1:
+    if check_early_exit(early_exit) and nprobe > 1:
         from .cellstats import load_stats, payload_column
         stats = load_stats(spark, root)
         if stats is not None and \
@@ -976,7 +959,7 @@ def ivf_batch_topk(spark: SparkSession, root: str,
                     part = _ivf_batch_early(
                         spark, stats, pa, qc, k, rerank_vectors,
                         rerank_cut, storage, _fanout, _cells_of,
-                        ee_mode, excluded=1 if exclude_self else 0,
+                        excluded=1 if exclude_self else 0,
                         all_cells=cells)
                 else:
                     part = _ivf_batch_tail(
@@ -991,7 +974,7 @@ def ivf_batch_topk(spark: SparkSession, root: str,
     if stats is not None:
         return _ivf_batch_early(spark, stats, probe_all, q, k,
                                 rerank_vectors, rerank_cut, storage,
-                                _fanout, _cells_of, ee_mode,
+                                _fanout, _cells_of,
                                 excluded=1 if exclude_self else 0)
     scored = _ivf_batch_score(_fanout(probe, _cells_of(probe)),
                               storage)
@@ -1001,141 +984,53 @@ def ivf_batch_topk(spark: SparkSession, root: str,
 
 def _ivf_batch_early(spark, stats, probe_all, q, k, rerank_vectors,
                      rerank_cut, storage, fanout, cells_of,
-                     mode="box", excluded=0, all_cells=None):
+                     excluded=0, all_cells=None):
     """The batch-probe early exit (r12 brief #1, batch shape) —
-    per-QUERY pruning, fully distributed.
+    per-QUERY pruning, fully distributed: each query's threshold is
+    its rank-1 cell's box LOWER bound (cellstats.lower_bound_col),
+    gated on that box's ``nz`` nonzero count ≥ m — derived entirely
+    from broadcast-joined probe-frame-sized frames, NO seed scan, NO
+    materialization barrier: the plan stays the plain batch probe's
+    single fan-out with a (possibly) smaller surviving-pairs
+    broadcast and IN-list, so early exit never costs wall.
 
-    ``mode="box"`` (default since r14 — VERDICT r13 #2): each
-    query's threshold is its rank-1 cell's box LOWER bound
-    (cellstats.lower_bound_col), gated on that box's ``nz`` nonzero
-    count ≥ m — derived entirely from broadcast-joined
-    probe-frame-sized frames, NO seed scan, NO materialization
-    barrier: the plan stays the plain batch probe's single fan-out
-    with a (possibly) smaller surviving-pairs broadcast and
-    IN-list, so early exit never costs wall.
-
-    ``mode="seed"`` (the r13 shape — maximal pruning under
-    constrained slots):
-
-    1. **seed**: scan only each query's rank-1 cell (the union of
-       rank-1 pairs), score, keep each query's top-m, MATERIALIZE;
-    2. **L_q** = each query's m-th seed cosine (queries with fewer
-       than m non-null seed cosines get no L — unprunable);
-    3. **prune pairs**: a rank>1 (qid, cell) pair drops when the
-       cell's box upper bound against THAT query
-       (cellstats.upper_bound_col — executor-side, boxes broadcast)
-       is < L_q: every row it would fan out scores below m rows the
-       query already has;
-    4. **union** seed with the surviving pairs' scored fan-out —
-       the scan's literal IN-list shrinks to the surviving cells.
-
-    Per-qid results equal the plain batch probe row-for-row in both
-    modes (test-pinned) — the same soundness argument as the
-    single-query :func:`cellstats.early_exit_scored`. ``all_cells``:
-    the probe frame's cell union when the caller already knows it
-    (the chunked path derives it driver-side) — skips one
-    control-plane job."""
+    Per-qid results equal the plain batch probe row-for-row
+    (test-pinned) — the same soundness argument as the single-query
+    :func:`cellstats.early_exit_scored`. ``all_cells``: the probe
+    frame's cell union when the caller already knows it (the chunked
+    path derives it driver-side) — skips one control-plane job."""
     from .cellstats import (bounds_frame, lower_bound_col,
                             upper_bound_col)
 
     if all_cells is None:
         all_cells = cells_of(probe_all)
-    if mode == "box":
-        m = (rerank_cut * k
-             if storage == "int8" and rerank_vectors is not None
-             else k)
-        p1 = probe_all.filter(F.col("rn") == 1).drop("rn")
-        bf = bounds_frame(spark, stats, "cell", all_cells)
-        qsq = F.expr(_dot_sql("qci", "qci"))
-        # nz >= m + excluded (r14 ADVICE high): exclude_self removes
-        # at most one stored row per query — a row nz counts but the
-        # scan never scores; with nz == m exactly, only m-1 rows
-        # witness the floor, so the gate demands one extra witness
-        # whenever an exclusion is active (cellstats.box_prune_keys
-        # is the single-query twin).
-        lq = (p1.join(F.broadcast(bf), "cell", "left")
-              .select("qid",
-                      F.when(F.col("nz") >= m + excluded,
-                             lower_bound_col(F.col("qci"), qsq))
-                      .alias("_L"))
-              .filter(F.col("_L").isNotNull()))
-        rest = probe_all.filter(F.col("rn") > 1).drop("rn")
-        survivors = (rest.join(F.broadcast(bf), "cell", "left")
-                     .join(F.broadcast(lq), "qid", "left")
-                     .withColumn("_ub",
-                                 upper_bound_col(F.col("qci"), qsq))
-                     .filter(F.col("_L").isNull()
-                             | F.col("dmin").isNull()
-                             | (F.col("_ub") >= F.col("_L")))
-                     .select("qid", "qci", "cell"))
-        pairs = p1.select("qid", "qci", "cell").unionByName(survivors)
-        scored = _ivf_batch_score(fanout(pairs, cells_of(pairs)),
-                                  storage)
-        return _ivf_batch_tail(scored, q, k, rerank_vectors,
-                               rerank_cut, storage)
-
     m = (rerank_cut * k
          if storage == "int8" and rerank_vectors is not None else k)
-    from pyspark.sql import Window
-    wk = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                           F.asc("vec_id"))
+    p1 = probe_all.filter(F.col("rn") == 1).drop("rn")
     bf = bounds_frame(spark, stats, "cell", all_cells)
     qsq = F.expr(_dot_sql("qci", "qci"))
-
-    def _tops(scored):
-        # count("cosine"), not count("*") (ADVICE r13): NULL-cosine
-        # rows (zero vectors/codes — legal) sort NULLS LAST under
-        # desc but still occupy seed slots when non-null rows run
-        # short; counting them would pass the >= m gate while min()
-        # skipped them — an OVERESTIMATED L that wrongly prunes
-        # cells holding true top-k rows. The single-query path
-        # (cellstats.early_exit_scored) filters None before its
-        # >= m check; this is the batch twin.
-        return (scored.groupBy("qid")
-                .agg(F.count("cosine").alias("_n"),
-                     F.min("cosine").alias("_L"))
-                .filter(F.col("_n") >= m).select("qid", "_L"))
-
-    def _prune(pairs, lq):
-        return (pairs.join(F.broadcast(bf), "cell", "left")
-                .join(F.broadcast(lq), "qid", "left")
-                .withColumn("_ub", upper_bound_col(F.col("qci"),
-                                                   qsq))
-                .filter(F.col("_L").isNull()
-                        | F.col("dmin").isNull()
-                        | (F.col("_ub") >= F.col("_L")))
-                .select("qid", "qci", "cell"))
-
-    p1 = probe_all.filter(F.col("rn") == 1).drop("rn")
-    scored = (_ivf_batch_score(fanout(p1, cells_of(p1)), storage)
-              .withColumn("rn", F.row_number().over(wk))
-              .filter(F.col("rn") <= m).drop("rn")
-              .localCheckpoint())
-    lq = _tops(scored)
-    handled = 1
-    if mode == "seed2":
-        # ITERATIVE TIGHTENING (r13 VERDICT #7): score the rank-2
-        # band (itself pruned by the seed threshold first),
-        # re-measure each query's m-th over seed ∪ band-2, and prune
-        # the remaining bands against the strictly-tighter value —
-        # band-at-a-time, one extra materialization barrier
-        band2 = _prune(probe_all.filter(F.col("rn") == 2).drop("rn"),
-                       lq).localCheckpoint()
-        b2cells = cells_of(band2)
-        if b2cells:
-            scored = (scored.unionByName(
-                _ivf_batch_score(fanout(band2, b2cells), storage))
-                .withColumn("rn", F.row_number().over(wk))
-                .filter(F.col("rn") <= m).drop("rn")
-                .localCheckpoint())
-            lq = _tops(scored)
-        handled = 2
-    rest = probe_all.filter(F.col("rn") > handled).drop("rn")
-    survivors = _prune(rest, lq).localCheckpoint()
-    cells2 = cells_of(survivors)
-    if cells2:
-        scored = scored.unionByName(
-            _ivf_batch_score(fanout(survivors, cells2), storage))
+    # nz >= m + excluded (r14 ADVICE high): exclude_self removes
+    # at most one stored row per query — a row nz counts but the
+    # scan never scores; with nz == m exactly, only m-1 rows
+    # witness the floor, so the gate demands one extra witness
+    # whenever an exclusion is active (cellstats.box_prune_keys
+    # is the single-query twin).
+    lq = (p1.join(F.broadcast(bf), "cell", "left")
+          .select("qid",
+                  F.when(F.col("nz") >= m + excluded,
+                         lower_bound_col(F.col("qci"), qsq))
+                  .alias("_L"))
+          .filter(F.col("_L").isNotNull()))
+    rest = probe_all.filter(F.col("rn") > 1).drop("rn")
+    survivors = (rest.join(F.broadcast(bf), "cell", "left")
+                 .join(F.broadcast(lq), "qid", "left")
+                 .withColumn("_ub", upper_bound_col(F.col("qci"), qsq))
+                 .filter(F.col("_L").isNull()
+                         | F.col("dmin").isNull()
+                         | (F.col("_ub") >= F.col("_L")))
+                 .select("qid", "qci", "cell"))
+    pairs = p1.select("qid", "qci", "cell").unionByName(survivors)
+    scored = _ivf_batch_score(fanout(pairs, cells_of(pairs)), storage)
     return _ivf_batch_tail(scored, q, k, rerank_vectors, rerank_cut,
                            storage)
 

@@ -227,7 +227,7 @@ def test_probe_parity_json_vs_parquet_root(spark, tmp_path,
                                        **kw).collect()]
 
     want = rows(roots["json"])
-    for mode in (False, True, "seed"):
+    for mode in (False, True):
         assert rows(roots["json"], early_exit=mode) == want, mode
         assert rows(roots["parquet"], early_exit=mode) == want, mode
     # fsck green on the parquet root too
@@ -244,7 +244,7 @@ def test_multitable_root_crosses_parquet_threshold(spark, tmp_path,
     boxes live in the sidecar. Pin the full round-trip: two ingests
     (widen → distributed merge), nz accounting (every vector is
     counted once PER TABLE), fsck's cellstats check green, and probe
-    parity plain vs box vs seed."""
+    parity plain vs box."""
     from light_redistribution_in_3dptf_data_pipeline_spark.catalog import (
         load_table)
     from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
@@ -271,15 +271,14 @@ def test_multitable_root_crosses_parquet_threshold(spark, tmp_path,
     rep = A.verify_ann_index(spark, root)
     assert rep["violations"] == []
     assert rep["cellstats_check"] == "checked"
-    # probe parity: the box/seed floors read the parquet sidecar
+    # probe parity: the box floors read the parquet sidecar
     qv = [float(x) for x in
           emb.filter("vec_id = 0").select("embedding").head()[0]]
     want = sorted((int(r.vec_id), round(float(r.cosine), 9))
                   for r in A.ann_incremental_topk(
                       spark, root, qv, k=10, exclude_id=0).collect())
-    for mode in (True, "seed"):
-        got = sorted((int(r.vec_id), round(float(r.cosine), 9))
-                     for r in A.ann_incremental_topk(
-                         spark, root, qv, k=10, exclude_id=0,
-                         early_exit=mode).collect())
-        assert got == want, mode
+    got = sorted((int(r.vec_id), round(float(r.cosine), 9))
+                 for r in A.ann_incremental_topk(
+                     spark, root, qv, k=10, exclude_id=0,
+                     early_exit=True).collect())
+    assert got == want

@@ -301,51 +301,12 @@ def test_batch_early_exit_equals_plain(spark, cl, roots):
 # ---------------------------------------------------------------- r14
 
 
-def test_seed_mode_equals_full_scan(spark, cl, roots):
-    """early_exit="seed" (the r13 two-phase shape, now opt-in)
-    stays row-for-row equal at single-query and batch fan-outs."""
-    qids = [0, 3, 41]
-    queries = (cl.filter(F.col("vec_id").isin(qids))
-               .select(F.col("vec_id").alias("qid"), "embedding"))
-
-    def rows(df):
-        return sorted((int(r.qid), int(r.vec_id), float(r.cosine))
-                      for r in df.collect())
-
-    for storage in ("float", "int8"):
-        root = roots[f"ivf_{storage}"]
-        qv = _qvec(cl, 3)
-        want = _rows(I.ivf_incremental_topk(
-            spark, root, qv, k=10, nprobe=4, exclude_id=3))
-        got = _rows(I.ivf_incremental_topk(
-            spark, root, qv, k=10, nprobe=4, exclude_id=3,
-            early_exit="seed"))
-        assert got == want, storage
-        wantb = rows(I.ivf_batch_topk(spark, root, queries, k=10,
-                                      nprobe=4))
-        gotb = rows(I.ivf_batch_topk(spark, root, queries, k=10,
-                                     nprobe=4, early_exit="seed"))
-        assert gotb == wantb, storage
-
-        aroot = roots[f"ann_{storage}"]
-        want = _rows(A.ann_incremental_topk(
-            spark, aroot, qv, k=10, hamming=2, exclude_id=3))
-        got = _rows(A.ann_incremental_topk(
-            spark, aroot, qv, k=10, hamming=2, exclude_id=3,
-            early_exit="seed"))
-        assert got == want, storage
-        wantb = rows(A.ann_batch_topk(spark, aroot, queries, k=10,
-                                      hamming=1))
-        gotb = rows(A.ann_batch_topk(spark, aroot, queries, k=10,
-                                     hamming=1, early_exit="seed"))
-        assert gotb == wantb, storage
-
-
 def test_early_exit_mode_validation(spark, cl, roots):
     qv = _qvec(cl, 0)
-    with pytest.raises(ValueError, match="early_exit must be"):
-        I.ivf_incremental_topk(spark, roots["ivf_float"], qv,
-                               early_exit="turbo")
+    for bad in ("turbo", "seed"):
+        with pytest.raises(ValueError, match="early_exit must be"):
+            I.ivf_incremental_topk(spark, roots["ivf_float"], qv,
+                                   early_exit=bad)
 
 
 def test_box_mode_prunes_without_seed_job(spark, cl, roots):
@@ -376,8 +337,7 @@ def test_box_mode_prunes_without_seed_job(spark, cl, roots):
 def test_nz_lifecycle_and_legacy_stats(spark, cl, tmp_path):
     """nz (the box-mode candidate floor) sums across widen merges,
     is recomputed at compaction, and an r13-era stats file WITHOUT
-    nz degrades box mode to no-pruning (sound) while seed mode still
-    prunes — both parity-pinned."""
+    nz degrades box mode to no-pruning (sound) — parity-pinned."""
     root = str(tmp_path / "ivf")
     I.init_ivf_index(spark, root, cl, train_k=8, train_metric="dot",
                      storage="int8")
@@ -390,7 +350,7 @@ def test_nz_lifecycle_and_legacy_stats(spark, cl, tmp_path):
     assert all(e.get("nz") == e["n"] for e in stats["keys"].values())
 
     # strip nz -> r13-era file; box mode must stop pruning but stay
-    # correct; seed mode still prunes off the measured threshold
+    # correct
     import math
 
     from light_redistribution_in_3dptf_data_pipeline_spark.fs import (
@@ -411,11 +371,10 @@ def test_nz_lifecycle_and_legacy_stats(spark, cl, tmp_path):
     assert pruned == [] and kept == some_keys
     want = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
                                         nprobe=4, exclude_id=0))
-    for mode in (True, "seed"):
-        got = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
-                                           nprobe=4, exclude_id=0,
-                                           early_exit=mode))
-        assert got == want, mode
+    got = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
+                                       nprobe=4, exclude_id=0,
+                                       early_exit=True))
+    assert got == want
 
     # a widen over the legacy file must NOT invent nz for merged keys
     I.ivf_ingest_delta(
@@ -472,7 +431,7 @@ def _mk_null_seed_ivf(spark, tmp_path, storage="float"):
 
 def test_null_cosine_seed_gate_ivf(spark, tmp_path):
     """ADVICE r13 (medium): zero-vector rows in the seed cell must
-    not inflate the >= m gate — seed-mode batch and single-query
+    not inflate the >= m gate — early-exit batch and single-query
     probes stay row-for-row equal to the plain probe even when the
     seed cell cannot fill the top-k with scorable rows."""
     root, qv = _mk_null_seed_ivf(spark, tmp_path)
@@ -489,17 +448,15 @@ def test_null_cosine_seed_gate_ivf(spark, tmp_path):
                                  nprobe=2))
     # the true ranks 4..10 come from cell 1 and must survive
     assert sum(1 for _, v, _ in want if v >= 200) == 7
-    for mode in ("seed", True):
-        got = rows(I.ivf_batch_topk(spark, root, queries, k=10,
-                                    nprobe=2, early_exit=mode))
-        assert got == want, mode
+    got = rows(I.ivf_batch_topk(spark, root, queries, k=10,
+                                nprobe=2, early_exit=True))
+    assert got == want
     wants = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
                                          nprobe=2))
-    for mode in ("seed", True):
-        gots = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
-                                            nprobe=2,
-                                            early_exit=mode))
-        assert gots == wants, mode
+    gots = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
+                                        nprobe=2,
+                                        early_exit=True))
+    assert gots == wants
 
 
 def test_chunked_pool_parity(spark, cl, roots):
@@ -549,16 +506,15 @@ def test_null_cosine_seed_gate_ivf_int8(spark, tmp_path):
     want = rows(I.ivf_batch_topk(spark, root, queries, k=10,
                                  nprobe=2))
     assert sum(1 for _, v, _ in want if v >= 200) == 7
-    for mode in ("seed", True):
-        got = rows(I.ivf_batch_topk(spark, root, queries, k=10,
-                                    nprobe=2, early_exit=mode))
-        assert got == want, mode
+    got = rows(I.ivf_batch_topk(spark, root, queries, k=10,
+                                nprobe=2, early_exit=True))
+    assert got == want
 
 
 def test_null_cosine_seed_gate_ann(spark, tmp_path):
     """LSH twin: zero vectors land in bucket 0 (all plane dots 0);
     a query whose own bucket is 0 sees them fill its seed slots.
-    Batch + single probes, seed and box modes, all equal plain."""
+    Batch + single early-exit probes equal plain."""
     import random
 
     from light_redistribution_in_3dptf_data_pipeline_spark.operators.similarity import (
@@ -596,11 +552,10 @@ def test_null_cosine_seed_gate_ann(spark, tmp_path):
     want = _rows(A.ann_incremental_topk(spark, root, qvf, k=10,
                                         hamming=1))
     assert any(v >= 200 for v, _ in want)
-    for mode in ("seed", True):
-        got = _rows(A.ann_incremental_topk(spark, root, qvf, k=10,
-                                           hamming=1,
-                                           early_exit=mode))
-        assert got == want, mode
+    got = _rows(A.ann_incremental_topk(spark, root, qvf, k=10,
+                                       hamming=1,
+                                       early_exit=True))
+    assert got == want
 
     queries = spark.createDataFrame(
         [(999, qvf)], "qid LONG, embedding ARRAY<FLOAT>")
@@ -613,124 +568,6 @@ def test_null_cosine_seed_gate_ann(spark, tmp_path):
 
     wantb = brows(A.ann_batch_topk(spark, root, queries, k=10,
                                    hamming=1))
-    for mode in ("seed", True):
-        gotb = brows(A.ann_batch_topk(spark, root, queries, k=10,
-                                      hamming=1, early_exit=mode))
-        assert gotb == wantb, mode
-
-
-def test_seed2_iterative_tightening_parity(spark, cl, roots):
-    """early_exit="seed2" (r13 VERDICT #7 — band-at-a-time
-    re-tightening) stays row-for-row equal at batch fan-outs, both
-    families and storages; single-query probes treat it as seed."""
-    qids = [0, 3, 17, 41]
-    queries = (cl.filter(F.col("vec_id").isin(qids))
-               .select(F.col("vec_id").alias("qid"), "embedding"))
-
-    def rows(df):
-        return sorted((int(r.qid), int(r.vec_id), float(r.cosine))
-                      for r in df.collect())
-
-    for storage in ("float", "int8"):
-        want = rows(I.ivf_batch_topk(spark, roots[f"ivf_{storage}"],
-                                     queries, k=10, nprobe=8))
-        got = rows(I.ivf_batch_topk(spark, roots[f"ivf_{storage}"],
-                                    queries, k=10, nprobe=8,
-                                    early_exit="seed2"))
-        assert got == want, storage
-        wanta = rows(A.ann_batch_topk(spark, roots[f"ann_{storage}"],
-                                      queries, k=10, hamming=2))
-        gota = rows(A.ann_batch_topk(spark, roots[f"ann_{storage}"],
-                                     queries, k=10, hamming=2,
-                                     early_exit="seed2"))
-        assert gota == wanta, storage
-    qv = _qvec(cl, 0)
-    want = _rows(I.ivf_incremental_topk(
-        spark, roots["ivf_int8"], qv, k=10, nprobe=4, exclude_id=0))
-    got = _rows(I.ivf_incremental_topk(
-        spark, roots["ivf_int8"], qv, k=10, nprobe=4, exclude_id=0,
-        early_exit="seed2"))
-    assert got == want
-
-
-def test_seed2_prunes_more_on_asymmetric_neighborhood(spark,
-                                                      tmp_path):
-    """Where the iterative round bites (r13 VERDICT #7): the seed
-    cell's own top-m is mediocre (L1 low), the rank-2 cell is rich
-    (re-measured L2 high), and the far cells' boxes sit between —
-    seed keeps them all, seed2 proves them away. On SYMMETRIC
-    mixtures the measured gain is zero (either the seed threshold
-    already prunes everything or the boxes are too loose for any
-    threshold) — tools/profile_seed2.py records that honestly."""
-    dim = 64
-
-    def vec(pairs):
-        v = [0.0] * dim
-        for i, x in pairs:
-            v[i] = x
-        return v
-
-    train, content = [], []
-    # cell 0 (seed): centroid ~e0; 3 great + 20 mediocre members
-    train.append((0, vec([(0, 1.0)]), 0))
-    for j in range(3):
-        content.append((j + 1, vec([(0, 1.0), (2, 0.001 * j)]), 0))
-    for j in range(20):
-        content.append((100 + j,
-                        vec([(0, 0.55), (1, 0.835), (2, 0.002 * j)]),
-                        0))
-    # cell 1 (rank 2): rich — 20 members at cosine ~0.9
-    train.append((1, vec([(0, 0.9), (3, 0.435)]), 1))
-    for j in range(20):
-        content.append((200 + j,
-                        vec([(0, 0.9), (3, 0.435), (2, 0.001 * j)]),
-                        1))
-    # cells 2..15: tight clusters whose best-possible cosine ~0.7 —
-    # above L1 (~0.55), below L2 (~0.9)
-    for c in range(2, 16):
-        train.append((c, vec([(0, 0.7), (c + 10, 0.714)]), c))
-        for j in range(5):
-            content.append((1000 * c + j,
-                            vec([(0, 0.7), (c + 10, 0.714),
-                                 (2, 0.001 * j)]), c))
-    tdf = spark.createDataFrame(
-        train, "vec_id LONG, embedding ARRAY<FLOAT>, label LONG")
-    cdf = spark.createDataFrame(
-        content, "vec_id LONG, embedding ARRAY<FLOAT>, cell LONG")
-    root = str(tmp_path / "asym")
-    I.init_ivf_index(spark, root, tdf)
-    I.ivf_ingest_delta(spark, root, cdf, "d1", cell_col="cell")
-
-    queries = spark.createDataFrame(
-        [(999, [1.0] + [0.0] * (dim - 1))],
-        "qid LONG, embedding ARRAY<FLOAT>")
-    real = I._ivf_batch_score
-    counter = {"pairs": 0}
-
-    def counting(cand, storage):
-        counter["pairs"] += (cand.select("qid", "cell").distinct()
-                             .count())
-        return real(cand, storage)
-
-    rows = {}
-    pairs = {}
-    for mode in (False, "seed", "seed2"):
-        I._ivf_batch_score = counting
-        counter["pairs"] = 0
-        try:
-            rows[mode] = sorted(
-                (int(r.qid), int(r.vec_id), float(r.cosine))
-                for r in I.ivf_batch_topk(spark, root, queries, k=10,
-                                          nprobe=16,
-                                          early_exit=mode).collect())
-        finally:
-            I._ivf_batch_score = real
-        pairs[mode] = counter["pairs"]
-    assert rows["seed"] == rows[False]
-    assert rows["seed2"] == rows[False]
-    # plain fans out all 16 cells; seed keeps every far cell (their
-    # bounds clear the mediocre L1); seed2's re-tightened threshold
-    # proves all 14 away
-    assert pairs[False] == 16
-    assert pairs["seed"] == 16          # 1 seed + 15 survivors
-    assert pairs["seed2"] == 2, pairs   # 1 seed + 1 band-2
+    gotb = brows(A.ann_batch_topk(spark, root, queries, k=10,
+                                  hamming=1, early_exit=True))
+    assert gotb == wantb

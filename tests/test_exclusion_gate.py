@@ -97,11 +97,6 @@ def test_ivf_single_query_exclusion_parity(spark, ivf_root):
         spark, ivf_root, qv, k=M, nprobe=2, exclude_id=0,
         early_exit=True))
     assert got == want
-    # seed mode inherits the box pre-prune — same corner
-    got = _rows(I.ivf_incremental_topk(
-        spark, ivf_root, qv, k=M, nprobe=2, exclude_id=0,
-        early_exit="seed"))
-    assert got == want
 
 
 def test_ivf_single_query_no_exclusion_still_prunes(spark, ivf_root):

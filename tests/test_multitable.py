@@ -175,16 +175,15 @@ def test_mt_recall_beats_single_table(spark, mt_root, emb, tmp_path):
 
 
 def test_mt_early_exit_parity(spark, mt_root, emb):
-    """Box and seed early exit compose with multi-table probing —
+    """Box early exit composes with multi-table probing —
     row-for-row equal to the plain probe."""
     qv = _qvec(emb, 0)
     want = _rows(A.ann_incremental_topk(spark, mt_root, qv, k=10,
                                         exclude_id=0))
-    for mode in (True, "seed"):
-        got = _rows(A.ann_incremental_topk(spark, mt_root, qv, k=10,
-                                           exclude_id=0,
-                                           early_exit=mode))
-        assert got == want, mode
+    got = _rows(A.ann_incremental_topk(spark, mt_root, qv, k=10,
+                                       exclude_id=0,
+                                       early_exit=True))
+    assert got == want
     queries = (emb.filter("vec_id < 4")
                .select(F.col("vec_id").alias("qid"), "embedding"))
 
@@ -193,10 +192,9 @@ def test_mt_early_exit_parity(spark, mt_root, emb):
                       for r in df.collect())
 
     wantb = brows(A.ann_batch_topk(spark, mt_root, queries, k=10))
-    for mode in (True, "seed"):
-        gotb = brows(A.ann_batch_topk(spark, mt_root, queries, k=10,
-                                      early_exit=mode))
-        assert gotb == wantb, mode
+    gotb = brows(A.ann_batch_topk(spark, mt_root, queries, k=10,
+                                  early_exit=True))
+    assert gotb == wantb
     # hamming=0 on a multi-table root still fans nt buckets per
     # query, so early exit engages (r14 ADVICE low: the old gate
     # keyed on len(masks) alone) — and stays row-for-row exact
@@ -323,9 +321,8 @@ def test_batch_probe_buckets_parity(spark, mt_root, emb, tmp_path):
     # composes with early exit + chunking
     want = brows(A.ann_batch_topk(spark, mt_root, queries, k=10,
                                   probe_buckets=16))
-    for mode in (True, "seed", "seed2"):
-        got = brows(A.ann_batch_topk(spark, mt_root, queries, k=10,
-                                     probe_buckets=16,
-                                     early_exit=mode,
-                                     max_queries_per_job=2))
-        assert got == want, mode
+    got = brows(A.ann_batch_topk(spark, mt_root, queries, k=10,
+                                 probe_buckets=16,
+                                 early_exit=True,
+                                 max_queries_per_job=2))
+    assert got == want

@@ -414,10 +414,6 @@ def main() -> None:
                                        nprobe=4, exclude_id=0,
                                        early_exit=True)
         bplan = box._jdf.queryExecution().executedPlan().toString()
-        seed = IV8.ivf_incremental_topk(spark, f"{td}/ee", qv_c,
-                                        nprobe=4, exclude_id=0,
-                                        early_exit="seed")
-        splan = seed._jdf.queryExecution().executedPlan().toString()
         lines.append("## ivf_incremental_topk early exit "
                      "(direction-box pruning, clustered int8 root, "
                      "nprobe=4)")
@@ -441,18 +437,9 @@ def main() -> None:
                      f"`{mb.group(0)}` — ONE scan, IN-list shrunk "
                      "to the unprunable seed cell by pure driver "
                      "arithmetic over the stats sidecar (zero extra "
-                     "jobs; never slower than plain)")
-        # SEED mode: the r13 two-phase shape — threshold measured
-        # from the seed cell's materialized top-m; fully pruned here,
-        # so the final plan holds NO parquet scan at all
-        assert "ReadSchema" not in splan, splan
-        lines.append("- seed-mode probe (early_exit=\"seed\"): NO "
-                     "parquet scan in the plan at all — all 3 "
-                     "non-seed cells pruned against the measured "
-                     "seed kth, the result is the "
-                     "already-materialized seed top-k; parity is "
-                     "row-for-row test-pinned for every mode "
-                     "(tests/test_early_exit.py)")
+                     "jobs; never slower than plain; parity is "
+                     "row-for-row test-pinned in "
+                     "tests/test_early_exit.py)")
         lines.extend(audit(bplan))
         lines.append("")
         print("# early-exit probe done", file=sys.stderr)
