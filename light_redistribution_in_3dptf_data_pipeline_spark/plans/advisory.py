@@ -95,11 +95,10 @@ def suggest_maintenance(spark: SparkSession, root: str,
     responsibility — there is no cheap way to re-verify that without
     re-running the scan this parameter exists to avoid)."""
     from ..fs import path_exists
-    from .ann_index import verify_ann_index
-    from .ivf_index import verify_ivf_index
     from .linkage import _index_kind
     from .migration import resolve_corpus_root, resolve_index_root
     from .recall import recall_history
+    from .vector_index import router_of, verify
 
     # kind dispatch (r12 brief #4): corpus roots — manifest protocol
     # but no _meta.json — get the corpus advisory; anything that is
@@ -116,20 +115,14 @@ def suggest_maintenance(spark: SparkSession, root: str,
                 max_pin_held_bytes=max_pin_held_bytes, now=now)
     root = resolved
     kind = _index_kind(spark, root)
-    if kind == "ann_lsh_incremental":
-        if fsck is None:
-            fsck = verify_ann_index(spark, root)
-        occ = fsck["bucket_occupancy"]
-        hot_key, hot = "hottest_bucket", occ.get("hottest_bucket")
-        compact_call = ("compact_ann_batches(root, "
-                        "rows_per_file=...)")
-    else:
-        if fsck is None:
-            fsck = verify_ivf_index(spark, root)
-        occ = fsck["cell_occupancy"]
-        hot_key, hot = "hottest_cell", occ.get("hottest_cell")
-        compact_call = ("compact_ivf_batches(root, "
-                        "rows_per_file=...)")
+    router = router_of(kind)
+    if fsck is None:
+        fsck = verify(spark, root, router)
+    occ = fsck[f"{router.key}_occupancy"]
+    hot_key = f"hottest_{router.key}"
+    hot = occ.get(hot_key)
+    compact_call = (f"compact_{router.family}_batches(root, "
+                    f"rows_per_file=...)")
 
     actions: list[dict] = []
 
@@ -555,13 +548,12 @@ def _hot_suppressed(spark, root: str, kind: str, hot,
     if not sized:
         return False
     target = sized[-1][1]
-    table, key = (("buckets", "bucket")
-                  if kind == "ann_lsh_incremental"
-                  else ("postings", "cell"))
+    from .vector_index import router_of
+    r = router_of(kind)
     n_files = sum(
         1 for b in live
         for f in list_dir(spark,
-                          f"{root}/{table}/batch_id={b}/{key}={hot}")
+                          f"{root}/{r.table}/batch_id={b}/{r.key}={hot}")
         if f.endswith(".parquet"))
     return n_files > 0 and max_rows / n_files <= target
 
@@ -626,14 +618,9 @@ def apply_maintenance(spark: SparkSession, root: str,
                 continue
             sized = "compact_hot" in names
             rpf = rows_per_file if sized else None
-            if kind == "ann_lsh_incremental":
-                from .ann_index import compact_ann_batches
-                cid = compact_ann_batches(spark, root,
-                                          rows_per_file=rpf)
-            elif kind == "ivf_incremental":
-                from .ivf_index import compact_ivf_batches
-                cid = compact_ivf_batches(spark, root,
-                                          rows_per_file=rpf)
+            if kind != "corpus":
+                from .vector_index import compact_batches
+                cid = compact_batches(spark, root, rows_per_file=rpf)
             else:
                 from .corpus import compact_batches
                 cid = compact_batches(spark, root)

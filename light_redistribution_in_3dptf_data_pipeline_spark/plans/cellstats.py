@@ -11,7 +11,7 @@ stored vectors' DIRECTIONS: for every cell (IVF) or bucket (LSH),
 is the unit direction of the STORED scoring payload — the int8 code
 (int8 roots) or the fixed-point nano components (float roots). The
 probes score exactly ``cos(q, v) = q·u / ‖q‖`` (plans/codes.
-code_cosine, ann_index._cosine_rerank), so for every member of a
+code_cosine, vector_index._scores), so for every member of a
 cell::
 
     cos(q, v)  =  Σ_i q_i·u_i / ‖q‖
@@ -126,7 +126,7 @@ def payload_column(storage: str) -> "tuple[str, Column]":
     - ``int8``  → kind "code": the stored code array;
     - ``float`` → kind "nano": the fixed-point decode of the stored
       embedding (operators.similarity._fixed_point — what
-      ``_cosine_rerank``/``_ivf_rerank`` score)."""
+      ``vector_index._scores`` scores)."""
     if storage == "int8":
         return "code", F.col("code")
     from ..operators.similarity import _fixed_point

@@ -115,7 +115,7 @@ def attach_codes(delta: DataFrame, dim: int, what: str) -> DataFrame:
     if "code" in delta.columns and "scale" in delta.columns:
         return delta
     from ..operators.similarity import _fixed_point
-    from .ivf_index import _checked_dim
+    from .vector_index import _checked_dim
 
     ci = _fixed_point(_checked_dim("embedding", dim, what))
     code, scale = quantize_code(ci)

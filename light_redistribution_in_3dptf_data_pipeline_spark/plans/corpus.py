@@ -1170,7 +1170,9 @@ def _prune_superseded(spark: SparkSession, root: str,
     return pruned
 
 
-def prune_uncommitted(spark: SparkSession, root: str) -> list[str]:
+def prune_uncommitted(spark: SparkSession, root: str,
+                      tables: "tuple[str, ...]" = INGEST_TABLES,
+                      op: str = "prune_uncommitted") -> list[str]:
     """Garbage-collect data-directory leftovers that have NO manifest
     and are not superseded — crashed ingests that were never retried
     under the same batch id. These are invisible to every reader, but
@@ -1181,10 +1183,12 @@ def prune_uncommitted(spark: SparkSession, root: str) -> list[str]:
     is why this takes the writer lease: while any ingest holds it,
     the sweep raises :class:`ConcurrentWriterError` instead of
     destroying the in-flight batch (the r7 docstring-only footgun,
-    closed by construction). Returns the orphan batch ids removed."""
-    with corpus_writer_lock(spark, root,
-                            op="prune_uncommitted") as lease:
-        return _prune_uncommitted(spark, root, lease=lease)
+    closed by construction). Returns the orphan batch ids removed.
+    ``tables``/``op``: the root's batch-partitioned tables and the
+    lease op name (the vector indexes share this sweep)."""
+    with corpus_writer_lock(spark, root, op=op) as lease:
+        return _prune_uncommitted(spark, root, lease=lease,
+                                  tables=tables)
 
 
 def _prune_uncommitted(spark: SparkSession, root: str,
@@ -1218,7 +1222,9 @@ def _prune_uncommitted(spark: SparkSession, root: str,
     return sorted(orphans)
 
 
-def delete_batch(spark: SparkSession, root: str, batch_id: str) -> None:
+def delete_batch(spark: SparkSession, root: str, batch_id: str,
+                 tables: "tuple[str, ...]" = INGEST_TABLES,
+                 op: str = "delete") -> None:
     """RETENTION/TAKEDOWN: de-commit a live batch. The manifest is
     deleted FIRST — one atomic remove that makes the whole batch
     (corpus rows AND its index rows) invisible everywhere — then the
@@ -1235,11 +1241,13 @@ def delete_batch(spark: SparkSession, root: str, batch_id: str) -> None:
     identity is folded into the compact partition, so row-level
     retention inside a compact batch needs a filter-and-rewrite of
     that one partition (re-ingest the survivors under a fresh id),
-    not this operation. Takes the writer lease."""
+    not this operation. Takes the writer lease. ``tables``/``op``:
+    the root's batch-partitioned tables and the lease op name (the
+    vector indexes share this delete)."""
     from ..fs import delete_path
 
     with corpus_writer_lock(spark, root,
-                            op=f"delete:{batch_id}") as lease:
+                            op=f"{op}:{batch_id}") as lease:
         ms = _load_manifests(spark, root)
         if batch_id not in ms or batch_id in _superseded(ms):
             raise ValueError(
@@ -1262,7 +1270,7 @@ def delete_batch(spark: SparkSession, root: str, batch_id: str) -> None:
         delete_path(spark, _manifest_path(root, batch_id))
         _write_snapshot(spark, root,
                         {b: m for b, m in ms.items() if b != batch_id})
-        for table in INGEST_TABLES:
+        for table in tables:
             delete_path(spark, f"{root}/{table}/batch_id={batch_id}")
 
 

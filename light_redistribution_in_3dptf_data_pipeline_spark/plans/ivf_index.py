@@ -1,45 +1,25 @@
-"""INCREMENTALLY-MAINTAINED IVF index — the coarse-quantizer analog
-of the incremental LSH index (plans/ann_index.py), closing the one
-similarity structure that still required a full rebuild per delta
-(operators/similarity.write_ivf_index; VERDICT r8 "What's missing"
-#1): at 100 TB you cannot re-cluster and rewrite every posting list
-because a day of embeddings arrived.
-
-The IVF contract that makes incremental maintenance sound is that the
-coarse quantizer is TRAINED ONCE and then FROZEN — exactly how FAISS
-serves IVF in production: re-training centroids per delta would move
-cell boundaries under the already-written posting lists, silently
-mis-probing everything older than the last delta. So:
+"""IVF ROUTER of the incremental vector index (plans/vector_index.py
+holds the store, the probes and the maintenance): the key is the
+``cell`` of a coarse quantizer that is TRAINED ONCE and then FROZEN —
+exactly how FAISS serves IVF in production: re-training centroids per
+delta would move cell boundaries under the already-written posting
+lists, silently mis-probing everything older than the last delta.
 
 - ``{root}/centroids`` — one row per cell (exact int64 nano-unit
   component sums + the training count), written by
-  :func:`init_ivf_index` and never again. L rows — driver-sized by
-  IVF construction (that is what a coarse quantizer IS).
-- ``{root}/_meta.json`` — the quantizer identity: kind, dim, cell
-  count, and a digest of the centroid table. Every ingest and every
-  query re-derives the digest from the stored centroids and refuses
-  on drift — a tampered/partially-rewritten centroid table would
-  otherwise silently re-route probes.
-- ``{root}/postings/batch_id=B/cell=N/`` — the vectors, Parquet
-  partitioned by batch THEN cell, so a top-k probe prunes on
-  ``cell IN (nprobe of L)`` inside every committed batch while batch
-  visibility stays the invisible-set complement on the first level.
-- ``{root}/_manifests/{batch_id}.json`` — written LAST: the commit.
-  Same snapshot cache, supersession compaction, writer lease + fence,
-  and crash recovery as the corpus — all reused from plans/corpus.
-
-Delta vectors are routed to cells by NEAREST FROZEN CENTROID (the
-same mean-scaled exact-integer score the query-time cell ranking
-uses, so placement and probing can never disagree); a batch may
-instead carry precomputed cells (``cell_col``) when an upstream
-clustering owns placement — the manifest records which
-(``cell_source``), and the fsck re-derives placement only where the
-nearest-centroid rule is the contract.
-
-Reference parity: the reference rebuilds its whole search structure
-per run; operators/similarity.write_ivf_index is this engine's
-one-shot restatement of that, and this module is its production
-shape (same argument as plans/ann_index.py's module docstring).
+  :func:`init_ivf_index` and never again; its digest is in
+  ``_meta.json`` and every ingest, probe and fsck re-derives it.
+  L rows — driver-sized by IVF construction (that is what a coarse
+  quantizer IS).
+- Placement: a vector goes to its NEAREST FROZEN CENTROID (the
+  mean-scaled exact-integer dot the query-time cell ranking uses, so
+  placement and probing can never disagree); a batch may instead
+  carry precomputed cells (``cell_col``) when an upstream clustering
+  owns placement — the manifest records which (``cell_source``), and
+  the fsck re-derives placement only where the nearest-centroid rule
+  is the contract.
+- Probes rank cells driver-side (single query) or in one window
+  (batch) and scan the top ``nprobe``.
 """
 
 from __future__ import annotations
@@ -49,52 +29,24 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import delete_path, path_exists, read_text, write_text_atomic
+from ..fs import path_exists, write_text_atomic
 from ..operators.similarity import EMB_DIM, TOP_K, _fixed_point
-from ..queries.similarity import (_dot_sql, _fixed_dot, _qdec,
-                                  exact_cosine)
-from .ann_index import _retain_vectors
-from .corpus import (BatchAlreadyIngested, _load_manifests,
-                     _manifest_path, _next_seq_id, _superseded,
-                     _visible_scan, _write_snapshot, corpus_writer_lock)
+from ..queries.similarity import _fixed_dot, _qdec
+from . import vector_index as VI
+from .corpus import (committed_batches, corpus_writer_lock, delete_batch,
+                     prune_uncommitted)
+from .vector_index import STORAGES, _checked_dim, _meta_path
 
 IVF_TABLE = "postings"
 CENTROIDS_TABLE = "centroids"
-META_NAME = "_meta.json"
 # split for the exact hi/lo integer dot against centroid SUMS (their
 # components reach nv·2^34, past the per-vector default) — the same
 # constant operators/similarity.ivf_search_topk uses for this fold.
 CSUM_SPLIT = 1 << 20
 
 
-STORAGES = ("float", "int8")
-
-
-def _ivf_schema(dim: int, storage: str = "float") -> str:
-    if storage == "int8":
-        from .codes import CODE_COLS
-        return (f"vec_id BIGINT, {CODE_COLS}, "
-                f"cell BIGINT, batch_id STRING")
-    return ("vec_id BIGINT, embedding ARRAY<FLOAT>, "
-            "cell BIGINT, batch_id STRING")
-
-
-def _schema_of(meta: dict) -> str:
-    return _ivf_schema(meta["dim"], meta.get("storage", "float"))
-
-
-def _meta_path(root: str) -> str:
-    return f"{root}/{META_NAME}"
-
-
 def _load_meta(spark: SparkSession, root: str) -> dict:
-    from ..fs import read_json_doc
-    doc = read_json_doc(spark, _meta_path(root))   # memoized (fs.py)
-    if doc is None:
-        raise ValueError(
-            f"incremental IVF root {root} has no {META_NAME} — not an "
-            f"initialized index (init_ivf_index creates it)")
-    return dict(doc)   # shallow copy: the cached doc is shared
+    return VI.load_meta(spark, root, ROUTER)
 
 
 def _centroid_digest(rows) -> str:
@@ -285,21 +237,6 @@ def init_ivf_index(spark: SparkSession, root: str, train: DataFrame,
         return meta
 
 
-def _checked_dim(vec: str, dim: int, what: str) -> str:
-    """SQL text of the embedding ``vec`` (SQL text) with the per-row
-    dimensionality guard of ``operators.similarity.lsh_buckets``
-    (ADVICE r9): ``zip_with`` NULL-pads a wrong-length vector, its
-    centroid dots fold to NULL, and ``max_by`` over a NULL score
-    deterministically dumps the row into the lowest cell id —
-    stored, never probed (its re-rank cosine is NULL), and invisible
-    to the fsck because the placement re-derivation NULL-folds
-    identically. Fail loudly at execution instead."""
-    msg = (f"{what}: expected {dim}-dim embedding, got "
-           .replace("\\", "\\\\").replace("'", "\\'"))
-    return (f"CASE WHEN size({vec}) = {dim} THEN {vec} ELSE raise_error("
-            f"concat('{msg}', CAST(size({vec}) AS STRING))) END")
-
-
 def _cell_scores(delta: DataFrame, cents: DataFrame,
                  dim: int = EMB_DIM):
     """(vec_id, cell, score) for every delta vector × centroid —
@@ -314,9 +251,14 @@ def _cell_scores(delta: DataFrame, cents: DataFrame,
                              "ivf cell scoring")).alias("ci"))
             .crossJoin(F.broadcast(cents))
             .select("vec_id", "cell",
-                    (_fixed_dot("ci", "csum", split=CSUM_SPLIT)
-                     .cast("double")
-                     / (F.col("nv") * F.lit(1e18))).alias("score")))
+                    _centroid_score("ci").alias("score")))
+
+
+def _centroid_score(ci: str):
+    """The mean-scaled exact-integer dot of the nano-unit vector
+    ``ci`` against a centroid row's (csum, nv) — as a double."""
+    return (_fixed_dot(ci, "csum", split=CSUM_SPLIT).cast("double")
+            / (F.col("nv") * F.lit(1e18)))
 
 
 def _attach_cells(delta: DataFrame, cent_rows, dim: int) -> DataFrame:
@@ -417,69 +359,144 @@ def assign_cells(spark: SparkSession, root: str,
         meta["dim"]).select("vec_id", "cell")
 
 
+def _ranked_cells(cent_rows, qci: list) -> "list[int]":
+    """Every cell, best first: the mean-scaled exact-integer centroid
+    dot against the query (Python arbitrary-precision ints — the same
+    double the executor-side placement folds), ties to the lower
+    cell id."""
+    return [c for _, c in sorted(
+        ((float(sum(int(s) * q for s, q in zip(r.csum, qci)))
+          / (r.nv * 1e18), int(r.cell)) for r in cent_rows),
+        key=lambda t: (-t[0], t[1]))]
+
+
+def _centroid_frame(spark: SparkSession, cent_rows) -> DataFrame:
+    return spark.createDataFrame(
+        [(int(r.cell), [int(s) for s in r.csum], int(r.nv))
+         for r in cent_rows],
+        "cell BIGINT, csum ARRAY<BIGINT>, nv BIGINT")
+
+
+class IvfRouter(VI.Router):
+    """Cells of the frozen quantizer; the routing state is the
+    digest-validated centroid rows."""
+
+    kind = "ivf_incremental"
+    family, label = "ivf", "IVF"
+    init_hint = "init_ivf_index creates it"
+    identity = "quantizer"
+    table, key, key_type = IVF_TABLE, "cell", "BIGINT"
+    check_name = "placement_check"
+    source_field = "cell_source"
+
+    def check_meta(self, spark, root, meta, what):
+        return _load_centroids(spark, root, meta)
+
+    def attach_keys(self, delta, state, meta, provided):
+        if not provided:
+            # in-row numpy argmax (zero exchanges) — parity notes on
+            # _attach_cells
+            return _attach_cells(delta, state, meta["dim"])
+        known = sorted(int(r.cell) for r in state)
+        n_unknown = (delta.filter(~F.col("cell").isin(known)
+                                  | F.col("cell").isNull()).count())
+        if n_unknown:
+            raise ValueError(
+                f"{n_unknown} delta rows carry a cell outside the "
+                f"frozen quantizer's {meta['n_cells']} cells — they "
+                f"would be stored but never probed")
+        return delta
+
+    def probe_keys(self, state, meta, query_vec, nprobe):
+        return _ranked_cells(state, _qdec(query_vec)[0])[:nprobe]
+
+    def batch_pairs(self, state, meta, q, nprobe):
+        # per-query cell ranking by the placement score (the same
+        # double the driver-side ranking folds), ties to the lower
+        # cell id
+        from pyspark.sql import Window
+
+        wc = Window.partitionBy("qid").orderBy(F.desc("score"),
+                                               F.asc("cell"))
+        return (q.crossJoin(F.broadcast(
+                    _centroid_frame(q.sparkSession, state)))
+                .withColumn("score", _centroid_score("qci"))
+                .withColumn("rn", F.row_number().over(wc))
+                .filter(F.col("rn") <= nprobe)
+                .select("qid", "qci", "qsq", "cell",
+                        (F.col("rn") == 1).alias("is_seed"))), nprobe
+
+    def expected_keys(self, spark, state, meta, ix, live):
+        """Membership (every stored cell is a quantizer cell — an
+        unknown cell is stored-but-never-probed data loss) and, for
+        ``cell_source == "assigned"`` batches, placement: the stored
+        cell equals the one re-derived from the row's own embedding
+        by the JVM ``_cell_scores`` fold — the check that pins the
+        ingest's numpy argmax (_attach_cells) to it bit for bit."""
+        violations = []
+        known = sorted(int(r.cell) for r in state)
+        n_unknown = ix.filter(~F.col("cell").isin(known)).count()
+        if n_unknown:
+            violations.append(
+                f"membership: {n_unknown} rows sit in a cell outside "
+                f"the frozen quantizer's {len(known)} cells (stored "
+                f"but never probed)")
+        if meta.get("storage", "float") == "int8":
+            # codes, not the original embeddings, are stored: a cell
+            # re-derived from the DEQUANTIZED vector can legitimately
+            # differ near a boundary — skipped, and SAID so
+            return ("skipped: int8 storage stores codes; placement "
+                    "re-derivation needs the original embeddings",
+                    violations)
+        assigned = [b for b, m in live.items()
+                    if m.get("cell_source") == "assigned"]
+        if not assigned:
+            return "skipped: no assigned-cell batches", violations
+        sub = ix.filter(F.col("batch_id").isin(assigned))
+        want = (_cell_scores(sub.select("vec_id", "embedding"),
+                             _centroid_frame(spark, state), meta["dim"])
+                .groupBy("vec_id")
+                .agg(F.max_by(F.col("cell"),
+                              F.struct(F.col("score"),
+                                       (-F.col("cell")).alias("nc")))
+                     .alias("_want")))
+        n_drift = (sub.select("vec_id", "cell").join(want, "vec_id")
+                   .filter(F.col("cell") != F.col("_want")).count())
+        if n_drift:
+            violations.append(
+                f"placement: {n_drift} assigned rows sit in a cell != "
+                f"their own embedding's nearest frozen centroid")
+        return "checked", violations
+
+
+ROUTER = IvfRouter()
+
+
+# ------------------------------------------------------------ wrappers
+
+
 def committed_ivf_batches(spark: SparkSession, root: str) -> list[str]:
-    ms = _load_manifests(spark, root)
-    gone = _superseded(ms)
-    return sorted(b for b in ms if b not in gone)
+    return committed_batches(spark, root)
 
 
 def read_ivf_postings(spark: SparkSession, root: str) -> DataFrame:
     """Every committed posting row, in the root's STORED layout
-    (float: vec_id, embedding, cell, batch_id; int8: vec_id, code,
-    scale, cell, batch_id) — visibility identical to the corpus
-    reader. For a storage-independent (vec_id, embedding) view use
-    :func:`ivf_vectors`."""
-    meta = _load_meta(spark, root)
-    committed = committed_ivf_batches(spark, root)
-    path = f"{root}/{IVF_TABLE}"
-    if not committed or not path_exists(spark, path):
-        return spark.createDataFrame([], _schema_of(meta))
-    return _visible_scan(spark, path, committed, _schema_of(meta))
+    (:func:`vector_index.read_index`)."""
+    return VI.read_index(spark, root, ROUTER)
 
 
 def read_ivf_cells(spark: SparkSession, root: str,
                    cells: "list[int]",
                    parallelism: "str | None" = "bytes") -> DataFrame:
-    """:func:`read_ivf_postings` scoped to a driver-known probed
-    cell set — the PROBE reader (r15, the LSH twin is
-    ann_index.read_ann_buckets): only the ``batch_id=B/cell=K``
-    leaf directories of the probe set are handed to the scan
-    (corpus._visible_scan_keys), so an nprobe-cell probe lists
-    nprobe × batches directories instead of the whole
-    n_cells × batches tree. Rows are identical to
-    ``read_ivf_postings(...).filter(cell IN cells)``
-    (parity-pinned). ``parallelism``: task-count bound of the
-    pruned scan — ``"bytes"`` (default; single-query probes) tracks
-    file bytes, ``None`` (batch fan-outs, whose per-byte scoring
-    work is ~Q×) keeps Spark's splitting — see
-    ``corpus._visible_scan_keys``."""
-    from .corpus import _visible_scan_keys
-
-    meta = _load_meta(spark, root)
-    committed = committed_ivf_batches(spark, root)
-    path = f"{root}/{IVF_TABLE}"
-    if not committed or not path_exists(spark, path):
-        return spark.createDataFrame([], _schema_of(meta))
-    return _visible_scan_keys(spark, path, committed,
-                              _schema_of(meta), "cell", cells,
-                              parallelism)
+    """The probe reader scoped to ``cells``
+    (:func:`vector_index.read_index`)."""
+    return VI.read_index(spark, root, ROUTER, cells, parallelism)
 
 
 def ivf_vectors(spark: SparkSession, root: str) -> DataFrame:
     """(vec_id, embedding) for every committed vector, whatever the
-    storage: float roots project the stored column, int8 roots
-    DEQUANTIZE (plans/codes.dequant_embedding — lossy by exactly the
-    sim5 reconstruction error). What training, recall grading, and a
-    cross-storage migration read."""
-    meta = _load_meta(spark, root)
-    scan = read_ivf_postings(spark, root)
-    if meta.get("storage", "float") == "int8":
-        from .codes import dequant_embedding
-        return scan.select(
-            "vec_id",
-            dequant_embedding(F.col("code"), F.col("scale"))
-            .alias("embedding"))
-    return scan.select("vec_id", "embedding")
+    storage (:func:`vector_index.vectors`)."""
+    return VI.vectors(spark, root, ROUTER)
 
 
 def ivf_ingest_delta(spark: SparkSession, root: str, emb: DataFrame,
@@ -490,139 +507,15 @@ def ivf_ingest_delta(spark: SparkSession, root: str, emb: DataFrame,
                      corpus_batch: "str | list[str] | None" = None,
                      _crash_after: str | None = None,
                      manifest_extra: dict | None = None) -> dict:
-    """Append a vector delta under the manifest-last commit protocol.
-    Cells come from the frozen quantizer (``cell_col=None``, the
-    production default) or from a caller-provided column (an upstream
-    clustering owns placement — values must be known cells).
-    ``corpus_batch`` records provenance for the cross-root fsck
-    (plans/linkage.verify_linked); ``manifest_extra`` merges caller
-    metadata (protocol keys refused — ann_index.
-    _merge_manifest_extra). Returns the committed manifest."""
-    if batch_id.startswith(("compact-", "retain-")):
-        raise ValueError(
-            f"batch_id {batch_id!r} uses a reserved maintenance prefix")
-    with corpus_writer_lock(spark, root,
-                            op=f"ivf_ingest:{batch_id}") as lease:
-        return _ivf_ingest_delta(spark, root, emb, batch_id, id_col,
-                                 vec_col, cell_col, dedup_ids,
-                                 corpus_batch, _crash_after, lease,
-                                 manifest_extra)
-
-
-def _ivf_ingest_delta(spark: SparkSession, root: str, emb: DataFrame,
-                      batch_id: str, id_col: str, vec_col: str,
-                      cell_col: str | None, dedup_ids: bool,
-                      corpus_batch: "str | list[str] | None",
-                      _crash_after: str | None, lease,
-                      manifest_extra: dict | None = None) -> dict:
-    meta = _load_meta(spark, root)
-    cent_rows = _load_centroids(spark, root, meta)
-    known_cells = sorted(int(r.cell) for r in cent_rows)
-
-    ms = _load_manifests(spark, root)
-    if batch_id in ms or batch_id in _superseded(ms):
-        raise BatchAlreadyIngested(
-            f"batch_id {batch_id!r} already ingested under {root} "
-            f"(manifest {_manifest_path(root, batch_id)})")
-    committed = sorted(b for b in ms if b not in _superseded(ms))
-    path = f"{root}/{IVF_TABLE}"
-    delete_path(spark, f"{path}/batch_id={batch_id}")
-
-    # dim-check the stored column itself so the PROVIDED-cell path is
-    # guarded too (its rows never pass through _cell_scores, but a
-    # wrong-dim vector would still be unprobeable: NULL re-rank cosine)
-    storage = meta.get("storage", "float")
-    cols = [F.col(id_col).alias("vec_id"),
-            F.expr(_checked_dim(f"CAST({vec_col} AS ARRAY<FLOAT>)",
-                                meta["dim"],
-                                f"ivf_ingest_delta({batch_id})"))
-            .alias("embedding")]
-    if cell_col is not None:
-        cols.append(F.col(cell_col).cast("bigint").alias("cell"))
-    if (storage == "int8" and "code" in emb.columns
-            and "scale" in emb.columns):
-        # codes arriving WITH the delta (an int8→int8 migration)
-        # are stored verbatim — no double-quantization loss
-        cols += [F.col("code").cast("array<tinyint>").alias("code"),
-                 F.col("scale").cast("bigint").alias("scale")]
-    delta = emb.select(*cols)
-    n_input = delta.count()
-    if dedup_ids and committed and path_exists(spark, path):
-        ids = _visible_scan(spark, path, committed,
-                            _schema_of(meta)).select("vec_id")
-        delta = delta.join(ids, "vec_id", "left_anti")
-    delta = delta.localCheckpoint()
-    n_admitted = delta.count()
-    lease.renew()
-
-    if cell_col is not None:
-        n_unknown = (delta.filter(
-            ~F.col("cell").isin(known_cells)
-            | F.col("cell").isNull()).count())
-        if n_unknown:
-            raise ValueError(
-                f"{n_unknown} delta rows carry a cell outside the "
-                f"frozen quantizer's {meta['n_cells']} cells — they "
-                f"would be stored but never probed")
-        tagged = delta
-    else:
-        # in-row numpy argmax (zero exchanges) — the crossJoin →
-        # groupBy → join-back shape this replaces paid two Exchange
-        # pairs per ingest; parity notes on _attach_cells
-        tagged = _attach_cells(delta, cent_rows, meta["dim"])
-    tagged = tagged.withColumn("batch_id", F.lit(batch_id))
-
-    if storage == "int8":
-        # placement above used the ORIGINAL embedding; only the
-        # STORED columns compress (plans/codes module docstring)
-        from .codes import attach_codes
-        stored = attach_codes(
-            tagged, meta["dim"],
-            f"ivf_ingest_delta({batch_id})").select(
-            "vec_id", "code", "scale", "cell", "batch_id")
-    else:
-        stored = tagged.select("vec_id", "embedding", "cell",
-                               "batch_id")
-    if n_admitted:
-        (stored.repartition(F.col("cell"))
-         .write.mode("append").partitionBy("batch_id", "cell")
-         .parquet(path))
-    if _crash_after == IVF_TABLE:
-        raise RuntimeError(
-            f"injected crash after {IVF_TABLE} write (batch {batch_id})")
-
-    manifest = {"batch_id": batch_id, "n_input": n_input,
-                "n_id_dupes": n_input - n_admitted,
-                "n_admitted": n_admitted,
-                "cell_source": ("provided" if cell_col is not None
-                                else "assigned")}
-    if corpus_batch is not None:
-        manifest["corpus_batch"] = corpus_batch
-    from .ann_index import _merge_manifest_extra
-    manifest = _merge_manifest_extra(manifest, manifest_extra)
-    lease.fence()
-    # direction-box widening BEFORE the manifest commit (and AFTER
-    # the fence, so a zombie writer can never clobber a new lease
-    # holder's stats): a crash here leaves a sound superset box
-    # (plans/cellstats module docstring). Bounds come from the
-    # `stored` lineage over the CHECKPOINTED delta: re-executing the
-    # assignment used to mean a second centroid crossJoin (measured
-    # 2.4× on the sf1 ingest leg — hence the old read-back of final
-    # bytes), but since r16 the assignment is one in-row numpy map
-    # (_attach_cells), so the re-run is a cheap fold over
-    # checkpointed rows while the read-back re-listed and re-read
-    # the per-cell tiny files every ingest (0.96 → 0.36 s at sf0.1
-    # on the ANN twin; at scale a full delta re-read from storage).
-    # Values identical: deterministic maps over a pinned input,
-    # lossless parquet round-trip for float32/int8/bigint.
-    if n_admitted:
-        from .cellstats import widen_stats
-        widen_stats(spark, root, stored, "cell", storage,
-                    meta["dim"])
-    write_text_atomic(spark, _manifest_path(root, batch_id),
-                      json.dumps(manifest, sort_keys=True))
-    _write_snapshot(spark, root, {**ms, batch_id: manifest})
-    return manifest
+    """Append a vector delta under the manifest-last commit protocol
+    (:func:`vector_index.ingest_delta`). Cells come from the frozen
+    quantizer (``cell_col=None``, the production default) or from a
+    caller-provided column (an upstream clustering owns placement —
+    values must be known cells). Returns the committed manifest."""
+    return VI.ingest_delta(spark, root, ROUTER, emb, batch_id, id_col,
+                           vec_col, dedup_ids, corpus_batch,
+                           _crash_after, manifest_extra,
+                           key_col=cell_col)
 
 
 def ivf_incremental_topk(spark: SparkSession, root: str,
@@ -631,191 +524,22 @@ def ivf_incremental_topk(spark: SparkSession, root: str,
                          exclude_id: int | None = None,
                          rerank_vectors: DataFrame | None = None,
                          rerank_cut: int = 4,
-                         early_exit: bool = False
-                         ) -> DataFrame:
-    """Top-k cosine over the COMMITTED index: rank cells DRIVER-SIDE
-    against the frozen centroids (exact arbitrary-precision integer
-    dots — identical to the executor-side placement score), then scan
-    the posting lists with a literal ``cell IN (nprobe)`` predicate —
-    static directory pruning inside every committed batch, zero
-    exchanges; batch visibility adds at most a NOT IN over the
-    (normally empty) invisible set. Scoring is the exact fixed-point
-    cosine re-rank of the one-shot ``ivf_indexed_topk``, so for equal
-    committed content the two return identical rows. ``root`` may be
-    a pointer file written by a migration cutover
-    (plans/migration.set_index_pointer) — resolved transparently —
-    or an :class:`migration.IndexPointerHandle` whose cached
-    resolution serves high-QPS probe loops without per-probe FS
-    reads.
+                         early_exit: bool = False) -> DataFrame:
+    """Top-k cosine over the committed index, scanning the ``nprobe``
+    cells whose frozen centroids rank best against the query
+    (:func:`vector_index.incremental_topk`). For equal committed
+    content the rows equal the one-shot ``ivf_indexed_topk``'s.
 
-    int8 roots (r11 brief #3) score the exact SCALE-FREE code cosine
-    over the pruned codes scan; pass ``rerank_vectors`` (a
-    (vec_id, embedding) float source — the corpus, or the embeddings
-    the index was built from) to take a top-(``rerank_cut``·k) cut
-    on code scores and exact-rerank ONLY those candidates with the
-    full fixed-point cosine (plans/codes module docstring).
-
-    ``early_exit=True`` (r12 brief #1; reshaped r14 per VERDICT r13
-    #2) SKIPS probed cells whose direction-box upper bound
-    (plans/cellstats) provably cannot reach the top-k — result rows
-    are IDENTICAL by the bound's soundness (test-pinned at every
-    fan-out); the win is the skipped posting lists' SCAN WORK. The
-    threshold is the seed cell's own box LOWER bound — pure driver
-    arithmetic over the stats sidecar, ZERO extra jobs, so the
-    early-exit plan is the plain plan with a (possibly) smaller
-    literal IN-list: never slower, idle or busy. On the clustered
-    bench fixture it prunes 3 of 4 separated cells.
-
-    A no-op on roots without committed stats. OFF by
-    default because on a uniform distribution the boxes are loose
-    and neither threshold prunes anything."""
-    from .migration import resolve_probe_location
-
-    root = resolve_probe_location(spark, root)
-    meta = _load_meta(spark, root)
-    dim = meta["dim"]
-    if len(query_vec) != dim:
-        raise ValueError(
-            f"expected {dim}-dim query vector, got {len(query_vec)}")
-    qci, qsq = _qdec(query_vec)
-
-    ranked = sorted(
-        ((float(sum(int(s) * q for s, q in zip(r.csum, qci)))
-          / (r.nv * 1e18), int(r.cell))
-         for r in _load_centroids(spark, root, meta)),
-        key=lambda t: (-t[0], t[1]))
-    probe_cells = [c for _, c in ranked[:nprobe]]
-
-    storage = meta.get("storage", "float")
-    # probe reader (r15): the probed cells are a driver literal
-    # list — scope the scan's file index to their leaf dirs; the
-    # inner cell filters (early-exit kept-sets, the plain IN) keep
-    # their semantics within it
-    scan = read_ivf_cells(spark, root, probe_cells)
-    from .cellstats import check_early_exit
-    stats = None
-    if check_early_exit(early_exit) and len(probe_cells) > 1:
-        from .cellstats import load_stats, payload_column
-        stats = load_stats(spark, root)
-        if stats is not None and \
-                stats["payload"] != payload_column(storage)[0]:
-            stats = None   # fsck names this drift; probe stays exact
-    m = (rerank_cut * k
-         if storage == "int8" and rerank_vectors is not None else k)
-    if stats is not None:
-        from .cellstats import early_exit_scored
-        scored, _ = early_exit_scored(
-            stats, scan, "cell", probe_cells, qci, qsq, m,
-            lambda s: _ivf_scores(s, qci, qsq, exclude_id, storage),
-            excluded=0 if exclude_id is None else 1)
-    else:
-        scored = _ivf_scores(
-            scan.filter(F.col("cell").isin(probe_cells)),
-            qci, qsq, exclude_id, storage)
-    ranked_rows = scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    if storage == "int8":
-        return _code_rerank_tail(ranked_rows, qci, qsq, k,
-                                 rerank_vectors, rerank_cut)
-    return ranked_rows.limit(k)
-
-
-def _ivf_scores(scan: DataFrame, qci: list, qsq: float,
-                exclude_id: int | None, storage: str) -> DataFrame:
-    """UNSORTED exact scored rows (vec_id, cosine, cell) of an
-    already cell-pruned scan — the shared scoring expression
-    (``queries.similarity.exact_cosine``) behind ``_ivf_rerank``
-    (float) and the codes-only probe (int8), factored out so the
-    plain and the EARLY-EXIT probes rank literally the same values
-    (cellstats.early_exit_scored)."""
-    if exclude_id is not None:
-        scan = scan.filter(F.col("vec_id") != exclude_id)
-    scored, cosine = exact_cosine(scan, qci, qsq, storage)
-    return scored.select("vec_id", cosine.alias("cosine"),
-                         F.col("cell").cast("bigint").alias("cell"))
-
-
-def _code_rerank_tail(ranked: DataFrame, qci: list, qsq: float,
-                      k: int, rerank_vectors: DataFrame | None,
-                      rerank_cut: int) -> DataFrame:
-    """The int8 probe tail over an already RANKED code-cosine frame:
-    the code-ranked top-k directly (the cosine IS the exact cosine
-    of the dequantized vectors), or an exact rerank of the
-    ``rerank_cut``·k candidate slice against the caller's float
-    vectors — the candidate list is probe-sized, so the fetch is a
-    broadcast join; point ``rerank_vectors`` at an id-prunable
-    source at scale."""
-    if rerank_vectors is None:
-        # column order matches _ivf_rerank / the batch probes
-        # (vec_id, cosine, cell) so positional consumers and
-        # cross-storage unions never see cell/cosine swapped
-        # (ADVICE r12)
-        return ranked.select("vec_id", "cosine", "cell").limit(k)
-    cand = ranked.limit(rerank_cut * k).select("vec_id", "cell")
-    fetch = (rerank_vectors.select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.col("embedding").cast("array<float>").alias("embedding"))
-        .join(F.broadcast(cand), "vec_id"))
-    return _ivf_rerank(fetch, qci, qsq, k, None)
-
-
-def _ivf_code_topk(scan: DataFrame, qci: list, qsq: float, k: int,
-                   exclude_id: int | None,
-                   rerank_vectors: DataFrame | None,
-                   rerank_cut: int) -> DataFrame:
-    """Top-k over an already cell-pruned int8 codes scan: exact
-    scale-free code cosine (plans/codes.code_cosine), then the
-    shared rerank tail (:func:`_code_rerank_tail`)."""
-    ranked = (_ivf_scores(scan, qci, qsq, exclude_id, "int8")
-              .orderBy(F.desc("cosine"), F.asc("vec_id")))
-    return _code_rerank_tail(ranked, qci, qsq, k, rerank_vectors,
-                             rerank_cut)
-
-
-def _ivf_rerank(scan: DataFrame, qci: list, qsq: float, k: int,
-                exclude_id: int | None) -> DataFrame:
-    """Exact fixed-point cosine re-rank over an already cell-pruned
-    (vec_id, embedding, cell) scan — shared by the committed and the
-    pinned probe so scoring can never drift."""
-    return (_ivf_scores(scan, qci, qsq, exclude_id, "float")
-            .orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(k))
-
-
-def _ivf_batch_score(cand: DataFrame, storage: str) -> DataFrame:
-    """(qid, vec_id, cosine, cell) exact per-pair scores over a
-    fanned-out candidate frame carrying (qid, vec_id, cell, qci,
-    code|embedding) — the shared scoring expression
-    (``queries.similarity.exact_cosine``) behind the plain AND the
-    early-exit batch probes (the batch twin of :func:`_ivf_scores`)."""
-    scored, cosine = exact_cosine(cand, "qci", _dot_sql("qci", "qci"),
-                                  storage)
-    return scored.select("qid", "vec_id", cosine.alias("cosine"),
-                         F.col("cell").cast("bigint").alias("cell"))
-
-
-def _ivf_batch_tail(scored: DataFrame, q: DataFrame, k: int,
-                    rerank_vectors: DataFrame | None,
-                    rerank_cut: int, storage: str) -> DataFrame:
-    """Per-qid top-k window over exact scored pairs, with the
-    optional int8 exact-rerank of each query's ``rerank_cut``·k code
-    slice (``q`` is the decoded (qid, qci) query frame the rerank
-    join needs)."""
-    from pyspark.sql import Window
-
-    wk = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                           F.asc("vec_id"))
-    if storage == "int8" and rerank_vectors is not None:
-        top = (scored.withColumn("rn", F.row_number().over(wk))
-               .filter(F.col("rn") <= rerank_cut * k).drop("rn"))
-        fetch = (rerank_vectors.select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            F.col("embedding").cast("array<float>").alias("embedding"))
-            .join(F.broadcast(top.select("qid", "vec_id", "cell")),
-                  "vec_id")
-            .join(F.broadcast(q.select("qid", "qci")), "qid"))
-        scored = _ivf_batch_score(fetch, "float")
-    return (scored.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") <= k).drop("rn"))
+    int8 roots score the exact SCALE-FREE code cosine over the pruned
+    codes scan; pass ``rerank_vectors`` (a (vec_id, embedding) float
+    source) to exact-rerank the top-(``rerank_cut``·k) code-ranked
+    candidates (plans/codes module docstring). ``early_exit=True``
+    skips probed cells whose direction box provably cannot reach the
+    top-k — rows identical; on the clustered bench fixture it prunes
+    3 of 4 separated cells at nprobe=4."""
+    return VI.incremental_topk(spark, root, ROUTER, query_vec, k,
+                               exclude_id, rerank_vectors, rerank_cut,
+                               early_exit, nprobe=nprobe)
 
 
 def ivf_batch_topk(spark: SparkSession, root: str,
@@ -828,211 +552,14 @@ def ivf_batch_topk(spark: SparkSession, root: str,
                    rerank_cut: int = 4,
                    early_exit: bool = False,
                    chunk_concurrency: int = 1) -> DataFrame:
-    """Top-k cosine for MANY queries in ONE job — the eval/serving
-    shape :func:`recall.measure_recall`'s docstring defers to: a
-    driver loop issues one small job per query (right for tens),
-    but grading or serving thousands wants a single distributed
-    plan (VERDICT r10 brief follow-through, r11).
-
-    Per query the result rows equal ``ivf_incremental_topk``'s (same
-    exact-integer cell ranking — executor-side here, but the same
-    arithmetic folded to the same double — same rerank, same tie
-    order; test-pinned). Plan shape:
-
-    1. queries × frozen centroids (both broadcast-sized) → per-query
-       top-``nprobe`` cells via one small window;
-    2. the postings scan keeps STATIC directory pruning: the probed
-       cells' union (≤ L values) is collected and becomes a literal
-       ``cell IN (...)`` partition filter;
-    3. pruned postings ⋈ broadcast (qid, cell) pairs fan each
-       posting row out to ONLY the queries probing its cell, then
-       the shared fixed-point rerank scores and a per-qid window
-       keeps k — one shuffle of the candidate rows by qid.
-
-    Returns (qid, vec_id, cosine, cell). ``exclude_self`` drops
-    ``vec_id == qid`` matches (self-neighborhood grading).
-    ``root`` may be a pointer/handle like the single-query probe.
-
-    The (qid, cell) probe frame and the decoded query table are
-    BROADCAST — right for the thousands-of-queries serving/grading
-    shape, but a million-query batch would blow the broadcast limit:
-    pass ``max_queries_per_job`` (r11 brief #6) and the batch
-    degrades to a deterministic loop of broadcast-sized jobs over
-    qid ranges (each chunk's small result is materialized, then
-    unioned) — per-qid results are independent, so chunked ≡
-    unchunked row-for-row (test-pinned). ``chunk_concurrency=N``
-    (r12 brief #2) overlaps up to N chunks from a bounded driver
-    pool (measured 2.6× wall at sf1/128 queries) at the cost of N
-    coexisting broadcasts/checkpoints — N× the peak memory the cap
-    exists to bound, so the default is 1: strict serial, opt-in
-    parallelism (ADVICE r13).
-
-    ``early_exit=True`` (r12 brief #1; reshaped r14): per-QUERY
-    posting-list pruning from the direction-box stats — see
-    :func:`_ivf_batch_early`; rows identical, the win is every
-    (qid, cell) pair whose best-possible cosine provably cannot
-    reach that query's top-k. The threshold derives from each
-    query's rank-1 cell box (zero extra jobs, never slower)."""
-    from pyspark.sql import Window
-
-    from .migration import resolve_probe_location
-
-    root = resolve_probe_location(spark, root)
-    meta = _load_meta(spark, root)
-    dim = meta["dim"]
-    cents = spark.createDataFrame(
-        [(int(r.cell), [int(s) for s in r.csum], int(r.nv))
-         for r in _load_centroids(spark, root, meta)],
-        "cell BIGINT, csum ARRAY<BIGINT>, nv BIGINT")
-
-    q = queries.select(
-        F.col(id_col).cast("bigint").alias("qid"),
-        _fixed_point(_checked_dim(vec_col, dim,
-                                  "ivf_batch_topk")).alias("qci"))
-    # per-query cell ranking: the same mean-scaled exact-integer dot
-    # as _cell_scores / the driver-side single-query ranking (both
-    # fold the identical integers to the identical double), ties to
-    # the lower cell id
-    scored = (q.crossJoin(F.broadcast(cents))
-              .select("qid", "qci", "cell",
-                      (_fixed_dot("qci", "csum", split=CSUM_SPLIT)
-                       .cast("double")
-                       / (F.col("nv") * F.lit(1e18))).alias("score")))
-    wc = Window.partitionBy("qid").orderBy(F.desc("score"),
-                                           F.asc("cell"))
-    probe_all = (scored.withColumn("rn", F.row_number().over(wc))
-                 .filter(F.col("rn") <= nprobe)
-                 .select("qid", "qci", "cell", "rn")
-                 .localCheckpoint())
-    probe = probe_all.drop("rn")
-
-    storage = meta.get("storage", "float")
-    from .cellstats import check_early_exit
-    stats = None
-    if check_early_exit(early_exit) and nprobe > 1:
-        from .cellstats import load_stats, payload_column
-        stats = load_stats(spark, root)
-        if stats is not None and \
-                stats["payload"] != payload_column(storage)[0]:
-            stats = None   # fsck names this drift; probe stays exact
-    def _fanout(pairs, cells):
-        # probe reader (r15): cells are a driver list by the time a
-        # fan-out is built — scope the scan's file index to them.
-        # parallelism=None: the fan-out's scoring work is ~Q× per
-        # scanned byte, so the single-probe bytes bound would
-        # under-parallelize it (measured — _visible_scan_keys notes)
-        c = read_ivf_cells(spark, root, cells, parallelism=None) \
-            .join(F.broadcast(pairs), "cell")
-        return (c.filter(F.col("vec_id") != F.col("qid"))
-                if exclude_self else c)
-
-    def _cells_of(pairs):
-        # driver-sized collect (≤ L values): the literal cell IN
-        # list that buys directory pruning, batch-count-independent
-        return sorted({int(r.cell) for r in
-                       pairs.select("cell").distinct().collect()})
-
-    if max_queries_per_job:
-        # chunked path (r17 reshape, guide §5): the ranking window
-        # above ran ONCE for the whole batch — one job, one
-        # checkpoint — and the tiny (qid, cell) pairs are collected
-        # ONCE, so chunk ranges AND every chunk's literal cell
-        # IN-list derive driver-side with zero further control-plane
-        # jobs (the former per-chunk recursion re-ran the window, its
-        # checkpoint, and a distinct-cells collect inside every
-        # chunk). The per-JOB broadcast cap is untouched: only a
-        # chunk's filtered pairs and queries are ever broadcast; the
-        # window job itself shuffles Q×L unbroadcast rows.
-        pairs_rows = probe_all.select("qid", "cell").collect()
-        qids = sorted({int(r.qid) for r in pairs_rows})
-        if len(qids) > max_queries_per_job:
-            from .ann_index import _run_chunks
-
-            def _one(bounds):
-                lo, hi = bounds
-                within = F.col("qid").between(lo, hi)
-                pa = probe_all.filter(within)
-                qc = q.filter(within)
-                cells = sorted({int(r.cell) for r in pairs_rows
-                                if lo <= r.qid <= hi})
-                if stats is not None:
-                    part = _ivf_batch_early(
-                        spark, stats, pa, qc, k, rerank_vectors,
-                        rerank_cut, storage, _fanout, _cells_of,
-                        excluded=1 if exclude_self else 0,
-                        all_cells=cells)
-                else:
-                    part = _ivf_batch_tail(
-                        _ivf_batch_score(
-                            _fanout(pa.drop("rn"), cells), storage),
-                        qc, k, rerank_vectors, rerank_cut, storage)
-                return part.localCheckpoint()
-            return _run_chunks(qids, max_queries_per_job, _one,
-                               chunk_concurrency)
-        # cap not exceeded: the single-job path below, probe frame
-        # already built
-    if stats is not None:
-        return _ivf_batch_early(spark, stats, probe_all, q, k,
-                                rerank_vectors, rerank_cut, storage,
-                                _fanout, _cells_of,
-                                excluded=1 if exclude_self else 0)
-    scored = _ivf_batch_score(_fanout(probe, _cells_of(probe)),
-                              storage)
-    return _ivf_batch_tail(scored, q, k, rerank_vectors, rerank_cut,
-                           storage)
-
-
-def _ivf_batch_early(spark, stats, probe_all, q, k, rerank_vectors,
-                     rerank_cut, storage, fanout, cells_of,
-                     excluded=0, all_cells=None):
-    """The batch-probe early exit (r12 brief #1, batch shape) —
-    per-QUERY pruning, fully distributed: each query's threshold is
-    its rank-1 cell's box LOWER bound (cellstats.lower_bound_col),
-    gated on that box's ``nz`` nonzero count ≥ m — derived entirely
-    from broadcast-joined probe-frame-sized frames, NO seed scan, NO
-    materialization barrier: the plan stays the plain batch probe's
-    single fan-out with a (possibly) smaller surviving-pairs
-    broadcast and IN-list, so early exit never costs wall.
-
-    Per-qid results equal the plain batch probe row-for-row
-    (test-pinned) — the same soundness argument as the single-query
-    :func:`cellstats.early_exit_scored`. ``all_cells``: the probe
-    frame's cell union when the caller already knows it (the chunked
-    path derives it driver-side) — skips one control-plane job."""
-    from .cellstats import (bounds_frame, lower_bound_col,
-                            upper_bound_col)
-
-    if all_cells is None:
-        all_cells = cells_of(probe_all)
-    m = (rerank_cut * k
-         if storage == "int8" and rerank_vectors is not None else k)
-    p1 = probe_all.filter(F.col("rn") == 1).drop("rn")
-    bf = bounds_frame(spark, stats, "cell", all_cells)
-    qsq = F.expr(_dot_sql("qci", "qci"))
-    # nz >= m + excluded (r14 ADVICE high): exclude_self removes
-    # at most one stored row per query — a row nz counts but the
-    # scan never scores; with nz == m exactly, only m-1 rows
-    # witness the floor, so the gate demands one extra witness
-    # whenever an exclusion is active (cellstats.box_prune_keys
-    # is the single-query twin).
-    lq = (p1.join(F.broadcast(bf), "cell", "left")
-          .select("qid",
-                  F.when(F.col("nz") >= m + excluded,
-                         lower_bound_col(F.col("qci"), qsq))
-                  .alias("_L"))
-          .filter(F.col("_L").isNotNull()))
-    rest = probe_all.filter(F.col("rn") > 1).drop("rn")
-    survivors = (rest.join(F.broadcast(bf), "cell", "left")
-                 .join(F.broadcast(lq), "qid", "left")
-                 .withColumn("_ub", upper_bound_col(F.col("qci"), qsq))
-                 .filter(F.col("_L").isNull()
-                         | F.col("dmin").isNull()
-                         | (F.col("_ub") >= F.col("_L")))
-                 .select("qid", "qci", "cell"))
-    pairs = p1.select("qid", "qci", "cell").unionByName(survivors)
-    scored = _ivf_batch_score(fanout(pairs, cells_of(pairs)), storage)
-    return _ivf_batch_tail(scored, q, k, rerank_vectors, rerank_cut,
-                           storage)
+    """Top-k cosine for MANY queries in one job
+    (:func:`vector_index.batch_topk`): queries × frozen centroids
+    (both broadcast-sized) rank each query's top-``nprobe`` cells in
+    one small window. Returns (qid, vec_id, cosine, cell)."""
+    return VI.batch_topk(spark, root, ROUTER, queries, k, id_col,
+                         vec_col, exclude_self, max_queries_per_job,
+                         rerank_vectors, rerank_cut, early_exit,
+                         chunk_concurrency, nprobe=nprobe)
 
 
 def ivf_pinned_topk(spark: SparkSession, root: str, pin,
@@ -1041,122 +568,26 @@ def ivf_pinned_topk(spark: SparkSession, root: str, pin,
                     exclude_id: int | None = None,
                     rerank_vectors: DataFrame | None = None,
                     rerank_cut: int = 4) -> DataFrame:
-    """Top-k cosine over a PINNED view of the IVF index — pinned
-    batch directories only (path selection), the same frozen-
-    quantizer driver-side cell ranking, and the same exact re-rank
-    as :func:`ivf_incremental_topk`: a quoted similarity result
-    re-runs bit-for-bit after the live index moves on. The quantizer
-    is frozen by contract, so the pinned probe ranks cells against
-    the same centroids the pinned vectors were placed with."""
-    meta = _load_meta(spark, root)
-    if len(query_vec) != meta["dim"]:
-        raise ValueError(
-            f"expected {meta['dim']}-dim query vector, "
-            f"got {len(query_vec)}")
-    qci, qsq = _qdec(query_vec)
-    ranked = sorted(
-        ((float(sum(int(s) * q for s, q in zip(r.csum, qci)))
-          / (r.nv * 1e18), int(r.cell))
-         for r in _load_centroids(spark, root, meta)),
-        key=lambda t: (-t[0], t[1]))
-    probe_cells = [c for _, c in ranked[:nprobe]]
-
-    from .snapshots import read_pinned_table
-
-    scan = (read_pinned_table(spark, root, pin, IVF_TABLE,
-                              schema=_schema_of(meta))
-            .filter(F.col("cell").isin(probe_cells)))
-    if meta.get("storage", "float") == "int8":
-        return _ivf_code_topk(scan, qci, qsq, k, exclude_id,
-                              rerank_vectors, rerank_cut)
-    return _ivf_rerank(scan, qci, qsq, k, exclude_id)
+    """Top-k cosine over a PINNED view of the IVF index
+    (:func:`vector_index.pinned_topk`). The quantizer is frozen by
+    contract, so the pinned probe ranks cells against the centroids
+    the pinned vectors were placed with."""
+    return VI.pinned_topk(spark, root, ROUTER, pin, query_vec, k,
+                          exclude_id, rerank_vectors, rerank_cut,
+                          nprobe=nprobe)
 
 
 def compact_ivf_batches(spark: SparkSession, root: str,
                         batch_ids: list[str] | None = None,
                         n_files_per_cell: int = 1,
                         rows_per_file: int | None = None) -> str:
-    """Fold many per-batch partitions into one ``compact-N`` batch —
-    the small-files relief for the per-batch L-way fan-out. Same
-    manifest-supersession commit as the corpus/LSH compactions.
-
-    SIZE-AWARE mode (VERDICT r10 #6): with ``rows_per_file`` set, a
-    hot cell no longer folds into ``n_files_per_cell`` files
-    regardless of row count — each cell is salted into
-    ``ceil(rows/target)`` write tasks (parallelizing the hot cell's
-    rewrite) and ``maxRecordsPerFile`` caps every output file at the
-    target, so file sizes stay balanced however skewed the cell
-    occupancy (the skew ``verify_ivf_index``'s occupancy canary
+    """Fold many per-batch partitions into one ``compact-N`` batch
+    (:func:`vector_index.compact_batches`) — the small-files relief
+    for the per-batch L-way fan-out; ``rows_per_file`` splits hot
+    cells (the skew ``verify_ivf_index``'s occupancy canary
     reports)."""
-    with corpus_writer_lock(spark, root, op="ivf_compact") as lease:
-        return _compact_ivf_batches(spark, root, batch_ids,
-                                    n_files_per_cell, lease,
-                                    rows_per_file)
-
-
-def _compact_ivf_batches(spark: SparkSession, root: str,
-                         batch_ids: list[str] | None,
-                         n_files_per_cell: int, lease,
-                         rows_per_file: int | None = None) -> str:
-    meta = _load_meta(spark, root)
-    ms = _load_manifests(spark, root)
-    gone = _superseded(ms)
-    live = [b for b in ms if b not in gone]
-    ids = sorted(batch_ids) if batch_ids is not None else sorted(live)
-    unknown = [b for b in ids if b not in live]
-    if unknown:
-        raise ValueError(f"cannot compact non-live batches {unknown}")
-    if not ids:
-        raise ValueError("nothing to compact: no live batches")
-
-    cid = _next_seq_id(ms, "compact")
-    path = f"{root}/{IVF_TABLE}"
-    delete_path(spark, f"{path}/batch_id={cid}")
-    if path_exists(spark, path):
-        rows = (spark.read.schema(_schema_of(meta))
-                .parquet(path)
-                .filter(F.col("batch_id").isin(ids))
-                .withColumn("batch_id", F.lit(cid))
-                .localCheckpoint())
-        from .ann_index import _size_aware_writer
-        (_size_aware_writer(rows, "cell", n_files_per_cell,
-                            rows_per_file)
-         .mode("append").partitionBy("batch_id", "cell")
-         .parquet(path))
-
-    replaces = sorted(set(ids) | {r for b in ids
-                                  for r in ms[b].get("replaces", ())})
-    sources = {ms[b].get("cell_source") for b in ids}
-    manifest = {
-        "batch_id": cid, "replaces": replaces,
-        **{k: sum(ms[b].get(k, 0) for b in ids)
-           for k in ("n_input", "n_id_dupes", "n_admitted")},
-        "cell_source": (sources.pop() if len(sources) == 1
-                        else "mixed"),
-    }
-    if rows_per_file is not None:
-        # size-aware compactions RECORD their target (see the LSH
-        # twin) — the advisory's compact_hot suppression reads it
-        manifest["rows_per_file"] = rows_per_file
-    from .corpus import _union_provenance
-    prov = _union_provenance(ms, ids)
-    if prov is not None:   # lineage survives compaction
-        manifest["corpus_batch"] = prov
-    lease.fence()
-    write_text_atomic(spark, _manifest_path(root, cid),
-                      json.dumps(manifest, sort_keys=True))
-    _write_snapshot(spark, root, {**ms, cid: manifest})
-
-    from .corpus import _prune_superseded
-    _prune_superseded(spark, root, tables=(IVF_TABLE,), lease=lease)
-    # compaction is the direction-box RE-TIGHTENING pass: recompute
-    # the early-exit stats exactly from the live rows just rewritten
-    # (also upgrades legacy pre-stats roots — plans/cellstats)
-    from .cellstats import recompute_stats
-    recompute_stats(spark, root, read_ivf_postings(spark, root),
-                    "cell", meta.get("storage", "float"),
-                    meta["dim"])
-    return cid
+    return VI.compact_batches(spark, root, batch_ids, n_files_per_cell,
+                              rows_per_file, ROUTER)
 
 
 def delete_ivf_vectors(spark: SparkSession, root: str,
@@ -1164,226 +595,33 @@ def delete_ivf_vectors(spark: SparkSession, root: str,
                        n_files_per_cell: int = 1,
                        release_conflicting_pins: bool = False,
                        _crash_after: str | None = None) -> str:
-    """ROW-LEVEL vector takedown for the IVF index — the shared
-    retain-N filter-and-rewrite (plans/ann_index._retain_vectors):
-    surviving rows keep their stored cells, so placement is
-    unchanged by construction. The retain manifest carries no
-    ``cell_source`` (its rows may mix assigned and provided
-    lineages), so the fsck applies the membership check to it rather
-    than re-deriving placement."""
-    with corpus_writer_lock(spark, root, op="ivf_retain") as lease:
-        return _retain_vectors(
-            spark, root, IVF_TABLE, "cell",
-            _schema_of(_load_meta(spark, root)),
-            vec_ids, n_files_per_cell, lease, _crash_after,
-            release_conflicting_pins)
+    """ROW-LEVEL vector takedown (:func:`vector_index.delete_vectors`):
+    surviving rows keep their stored cells, so placement is unchanged
+    by construction."""
+    return VI.delete_vectors(spark, root, vec_ids, n_files_per_cell,
+                             release_conflicting_pins, _crash_after,
+                             ROUTER)
 
 
 def prune_ivf_uncommitted(spark: SparkSession, root: str) -> list[str]:
-    """Garbage-collect cell partitions with NO manifest that are not
-    superseded — crashed ingests never retried under the same batch
-    id. ``verify_ivf_index`` NAMES these orphans; this sweeps them.
-    Takes the writer lease."""
-    from .corpus import _prune_uncommitted
-
-    with corpus_writer_lock(spark, root,
-                            op="ivf_prune_uncommitted") as lease:
-        return _prune_uncommitted(spark, root, lease=lease,
-                                  tables=(IVF_TABLE,))
+    """Sweep crashed ingests' cell partitions
+    (:func:`corpus.prune_uncommitted` over this root's table)."""
+    return prune_uncommitted(spark, root, tables=(ROUTER.table,),
+                             op=f"{ROUTER.family}_prune_uncommitted")
 
 
 def delete_ivf_batch(spark: SparkSession, root: str,
                      batch_id: str) -> None:
-    """RETENTION: de-commit a live vector batch — manifest deleted
-    first, partition swept after; ids become re-admittable."""
-    with corpus_writer_lock(spark, root,
-                            op=f"ivf_delete:{batch_id}") as lease:
-        ms = _load_manifests(spark, root)
-        if batch_id not in ms or batch_id in _superseded(ms):
-            raise ValueError(
-                f"batch_id {batch_id!r} is not a live committed batch "
-                f"under {root}")
-        from .snapshots import PinConflictError, list_pins
-        # closure: see corpus.delete_batch — deleting the manifest
-        # would resurrect pinned-held replaced batches as live
-        closure = {batch_id} | set(ms[batch_id].get("replaces", ()))
-        holders = sorted(d for d, p in list_pins(spark, root).items()
-                         if set(p["batches"]) & closure)
-        if holders:
-            raise PinConflictError(
-                f"batch {batch_id!r} (or a batch it replaced) is "
-                f"held by pins {holders} — release them before the "
-                f"batch-level delete")
-        lease.fence()
-        delete_path(spark, _manifest_path(root, batch_id))
-        _write_snapshot(spark, root,
-                        {b: m for b, m in ms.items() if b != batch_id})
-        delete_path(spark, f"{root}/{IVF_TABLE}/batch_id={batch_id}")
+    """RETENTION: de-commit a live vector batch
+    (:func:`corpus.delete_batch` over this root's table)."""
+    delete_batch(spark, root, batch_id, tables=(ROUTER.table,),
+                 op=f"{ROUTER.family}_delete")
 
 
 def verify_ivf_index(spark: SparkSession, root: str) -> dict:
-    """Consistency fsck for the incremental IVF index — invariants:
-
-    - **quantizer**: the stored centroid table matches the frozen
-      ``_meta`` digest (checked by every loader; re-checked here);
-    - **ledger**: every live batch holds exactly its manifest's
-      ``n_admitted`` vectors (missing directory = violation);
-    - **uniqueness**: ``vec_id`` globally unique across the live
-      index;
-    - **membership**: every stored row's cell is one of the frozen
-      quantizer's cells (an unknown cell is stored-but-never-probed
-      data loss);
-    - **placement**: for batches ingested under the nearest-centroid
-      contract (``cell_source == "assigned"``), the stored cell
-      equals the cell re-derived from the row's own embedding
-      against the frozen centroids;
-    - **orphans**: unmanifested/superseded partitions still on disk.
-
-    The report also carries the CELL-OCCUPANCY canary (VERDICT r10
-    #6 — the skew signal the dedup ledgers already have): max /
-    median / mean rows per occupied cell and the hottest cell id,
-    so a drifting embedding distribution piling into few cells is
-    visible before probe latency shows it. One L-row aggregate —
-    driver-sized by IVF construction.
-
-    One aggregate scan each; nothing collected row-wise."""
-    import statistics
-
-    from ..fs import list_dir
-
-    meta = _load_meta(spark, root)
-    violations: list[str] = []
-    placement_check = "skipped: no live data or no quantizer"
-    try:
-        cent_rows = _load_centroids(spark, root, meta)
-    except ValueError as e:
-        violations.append(f"quantizer: {e}")
-        cent_rows = None
-
-    ms = _load_manifests(spark, root)
-    gone = _superseded(ms)
-    live = sorted(b for b in ms if b not in gone)
-    path = f"{root}/{IVF_TABLE}"
-    ix = (_visible_scan(spark, path, live, _schema_of(meta))
-          if live and path_exists(spark, path) else None)
-    n_rows = 0
-    occupancy: dict = {"n_cells_occupied": 0, "max": 0, "median": 0,
-                       "mean": 0.0, "hottest_cell": None}
-    if ix is None and live:
-        for bid in live:
-            want = ms[bid].get("n_admitted", 0)
-            if want:
-                violations.append(
-                    f"ledger: batch {bid} manifest says {want} "
-                    f"vectors but {path} is missing")
-    if ix is not None:
-        per_batch = {r.batch_id: r.n for r in
-                     ix.groupBy("batch_id")
-                     .agg(F.count("*").alias("n")).collect()}
-        n_rows = sum(per_batch.values())
-        for bid in live:
-            want = ms[bid].get("n_admitted", 0)
-            got = per_batch.get(bid, 0)
-            if want != got:
-                violations.append(
-                    f"ledger: batch {bid} has {got} vectors, "
-                    f"manifest says {want}")
-        n_dupes = (ix.groupBy("vec_id")
-                   .agg(F.count("*").alias("n"))
-                   .filter(F.col("n") > 1).count())
-        if n_dupes:
-            violations.append(
-                f"uniqueness: {n_dupes} vec_ids appear in more than "
-                f"one live index row")
-        per_cell = {int(r.cell): int(r.n) for r in
-                    ix.groupBy("cell")
-                    .agg(F.count("*").alias("n")).collect()
-                    if r.cell is not None}
-        if per_cell:
-            occ = sorted(per_cell.values())
-            occupancy = {
-                "n_cells_occupied": len(occ),
-                "max": occ[-1],
-                "median": statistics.median(occ),
-                "mean": round(sum(occ) / len(occ), 2),
-                "hottest_cell": max(per_cell, key=per_cell.get)}
-        if cent_rows is not None:
-            known = sorted(int(r.cell) for r in cent_rows)
-            n_unknown = ix.filter(~F.col("cell").isin(known)).count()
-            if n_unknown:
-                violations.append(
-                    f"membership: {n_unknown} rows sit in a cell "
-                    f"outside the frozen quantizer's {len(known)} "
-                    f"cells (stored but never probed)")
-            assigned = [b for b in live
-                        if ms[b].get("cell_source") == "assigned"]
-            if meta.get("storage", "float") == "int8":
-                # codes, not the original embeddings, are stored: a
-                # cell re-derived from the DEQUANTIZED vector can
-                # legitimately differ near a boundary, so the
-                # placement re-derivation would false-positive —
-                # skipped, and SAID so (membership/ledger/uniqueness
-                # still checked above)
-                placement_check = ("skipped: int8 storage stores "
-                                   "codes; placement re-derivation "
-                                   "needs the original embeddings")
-            elif assigned:
-                placement_check = "checked"
-                sub = ix.filter(F.col("batch_id").isin(assigned))
-                cents = spark.createDataFrame(
-                    [(int(r.cell), [int(s) for s in r.csum],
-                      int(r.nv)) for r in cent_rows],
-                    "cell BIGINT, csum ARRAY<BIGINT>, nv BIGINT")
-                want = (_cell_scores(
-                    sub.select("vec_id", "embedding"), cents,
-                    meta["dim"])
-                    .groupBy("vec_id")
-                    .agg(F.max_by(
-                        F.col("cell"),
-                        F.struct(F.col("score"),
-                                 (-F.col("cell")).alias("nc")))
-                        .alias("_want")))
-                n_drift = (sub.select("vec_id", "cell")
-                           .join(want, "vec_id")
-                           .filter(F.col("cell") != F.col("_want"))
-                           .count())
-                if n_drift:
-                    violations.append(
-                        f"placement: {n_drift} assigned rows sit in "
-                        f"a cell != their own embedding's nearest "
-                        f"frozen centroid")
-            else:
-                placement_check = "skipped: no assigned-cell batches"
-
-    # early-exit direction boxes must COVER every live row — a row
-    # outside its box could be wrongly pruned at probe time, the one
-    # data-loss class early exit can add (plans/cellstats)
-    from .cellstats import verify_stats
-    if ix is not None:
-        cellstats_check, cs_viol = verify_stats(
-            spark, root, ix, "cell", meta.get("storage", "float"),
-            meta["dim"])
-        violations += cs_viol
-    else:
-        cellstats_check = "skipped: no live data"
-
-    live_set = set(live)
-    orphans = {
-        child[len("batch_id="):]
-        for child in list_dir(spark, path)
-        if child.startswith("batch_id=")
-        and child[len("batch_id="):] not in live_set}
-    # snapshot-pinned batches are deliberately held, not sweepable
-    # garbage — same split as corpus.verify_corpus
-    from .snapshots import pinned_batches
-    pinned = orphans & pinned_batches(spark, root)
-    from ..fs import dir_bytes
-    return {"live_batches": len(live), "index_rows": n_rows,
-            "cell_occupancy": occupancy,
-            "storage": meta.get("storage", "float"),
-            "cellstats_check": cellstats_check,
-            "placement_check": placement_check,
-            "table_bytes": (dir_bytes(spark, path)
-                            if path_exists(spark, path) else 0),
-            "orphans": sorted(orphans - pinned),
-            "pinned_held": sorted(pinned), "violations": violations}
+    """Consistency fsck (:func:`vector_index.verify`): quantizer
+    digest, ledger, uniqueness, cell membership, nearest-centroid
+    placement of assigned batches, direction boxes and orphans, plus
+    the ``cell_occupancy`` canary. Placement is reported under
+    ``placement_check``."""
+    return VI.verify(spark, root, ROUTER)

@@ -76,7 +76,8 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import EMB_DIM, _fixed_point
 from ..queries.similarity import _fixed_dot, _fixed_dot_sql
-from .ivf_index import CSUM_SPLIT, _checked_dim
+from .ivf_index import CSUM_SPLIT
+from .vector_index import _checked_dim
 
 DEFAULT_ITERS = 10
 METRICS = ("l2", "dot")

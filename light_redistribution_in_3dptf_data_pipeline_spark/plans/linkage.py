@@ -30,7 +30,6 @@ collected for the report.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..fs import path_exists
 from .corpus import _load_manifests, _superseded, _visible_scan
@@ -41,21 +40,9 @@ ORPHAN_SAMPLE = 10
 def _index_kind(spark: SparkSession, index_root: str) -> str:
     """The incremental vector-index family stored under a root, from
     its ``_meta.json`` — loud on anything that is not one."""
-    import json
+    from .vector_index import load_meta, router_of
 
-    from ..fs import read_text
-
-    meta_path = f"{index_root}/_meta.json"
-    if not path_exists(spark, meta_path):
-        raise ValueError(
-            f"{index_root} has no _meta.json — not an initialized "
-            f"incremental vector index")
-    kind = json.loads(read_text(spark, meta_path)).get("kind")
-    if kind not in ("ann_lsh_incremental", "ivf_incremental"):
-        raise ValueError(
-            f"{index_root} holds index kind {kind!r} — not an "
-            f"incremental vector index this fsck understands")
-    return kind
+    return router_of(load_meta(spark, index_root).get("kind")).kind
 
 
 def _committed_vec_ids(spark: SparkSession,
@@ -63,22 +50,10 @@ def _committed_vec_ids(spark: SparkSession,
     """(vec_id) of every committed vector under an incremental
     vector-index root, LSH or IVF — dispatched on the ``_meta.json``
     kind so the caller doesn't care which index family it links."""
-    if _index_kind(spark, index_root) == "ann_lsh_incremental":
-        from pyspark.sql import functions as F
+    from .vector_index import vectors
 
-        from .ann_index import _load_meta, _num_tables, read_ann_index
-
-        scan = read_ann_index(spark, index_root)
-        meta = _load_meta(spark, index_root)
-        if _num_tables(meta) > 1:
-            # one row per VECTOR: the table-0 partition (multi-table
-            # roots store one copy per hyperplane table)
-            scan = scan.filter(
-                F.col("bucket") < (1 << meta["num_planes"]))
-        return scan.select("vec_id")
-    from .ivf_index import read_ivf_postings
-
-    return read_ivf_postings(spark, index_root).select("vec_id")
+    _index_kind(spark, index_root)   # loud on a bad root
+    return vectors(spark, index_root).select("vec_id")
 
 
 def verify_deployment(spark: SparkSession, corpus_root: str,
@@ -123,12 +98,11 @@ def verify_deployment(spark: SparkSession, corpus_root: str,
     everything consistent" is one empty-list check. Each sub-check
     stays independently callable; this adds no new invariants, only
     the composition."""
-    from .ann_index import verify_ann_index
     from .corpus import verify_corpus
-    from .ivf_index import verify_ivf_index
     from .migration import resolve_index_root
     from .snapshots import (list_linked_pins, list_pins, pins_report,
                             verify_linked_pin, verify_pin)
+    from .vector_index import router_of, verify
 
     # operators hand this the same locations their probes use — a
     # migration-cutover pointer resolves to its root (passthrough on
@@ -170,9 +144,7 @@ def verify_deployment(spark: SparkSession, corpus_root: str,
 
     for iroot in index_roots:
         kind = _index_kind(spark, iroot)
-        fsck = (verify_ann_index if kind == "ann_lsh_incremental"
-                else verify_ivf_index)
-        rep = fsck(spark, iroot)
+        rep = verify(spark, iroot)
         out["roots"][iroot] = rep
         out["violations"] += [f"{iroot}: {v}"
                               for v in rep["violations"]]
@@ -180,8 +152,7 @@ def verify_deployment(spark: SparkSession, corpus_root: str,
         out["linked"][iroot] = linked
         out["violations"] += [f"{corpus_root}⇆{iroot}: {v}"
                               for v in linked["violations"]]
-        _check_pins(iroot, ("buckets" if kind == "ann_lsh_incremental"
-                            else "postings"))
+        _check_pins(iroot, router_of(kind).table)
         from .recall import recall_history
         hist = recall_history(spark, iroot)
         out["recall"][iroot] = hist
@@ -279,20 +250,13 @@ def takedown_documents(spark: SparkSession, corpus_root: str,
     report: dict = {"indexes": {}, "corpus": None, "skipped": []}
     for iroot in index_roots:
         iroot = resolve_index_root(spark, iroot, strict=False)
-        kind = _index_kind(spark, iroot)   # loud on a bad root
+        _index_kind(spark, iroot)   # loud on a bad root
         try:
-            if kind == "ivf_incremental":
-                from .ivf_index import delete_ivf_vectors
+            from .vector_index import delete_vectors
 
-                report["indexes"][iroot] = delete_ivf_vectors(
-                    spark, iroot, doc_ids,
-                    release_conflicting_pins=release_conflicting_pins)
-            else:
-                from .ann_index import delete_vectors
-
-                report["indexes"][iroot] = delete_vectors(
-                    spark, iroot, doc_ids,
-                    release_conflicting_pins=release_conflicting_pins)
+            report["indexes"][iroot] = delete_vectors(
+                spark, iroot, doc_ids,
+                release_conflicting_pins=release_conflicting_pins)
         except ValueError as e:   # no live batch holds any target
             report["indexes"][iroot] = None
             report["skipped"].append(f"{iroot}: {e}")

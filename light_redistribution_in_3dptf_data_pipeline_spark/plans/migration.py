@@ -2,7 +2,7 @@
 contract deliberately lacks (VERDICT r9 missing #1).
 
 Both incremental index families freeze their routing structure at
-initialization — IVF centroids (plans/ivf_index.py:8-12) and LSH
+initialization — IVF centroids (plans/ivf_index.py) and LSH
 hyperplanes (plans/ann_index._check_meta) — because re-training per
 delta would move cell/bucket boundaries under already-written
 postings. Correct, but when the embedding DISTRIBUTION shifts (new
@@ -404,29 +404,36 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
         raise ValueError(f"nothing to migrate: no committed batches "
                          f"under {old_root}")
 
+    from .vector_index import (_num_tables, load_meta, one_copy,
+                               read_index, vectors, verify)
+
+    ometa = load_meta(spark, old_root)
+    old_storage = ometa.get("storage", "float")
+    resume = path_exists(spark, f"{new_root}/_meta.json")
+    if resume:
+        # RESUME (ADVICE r12): the new root's own meta is the layout
+        # authority — an interrupted float→int8 migration re-run
+        # WITHOUT storage= must keep the new layout, not fall back to
+        # the old root's (the ingest would refuse loudly, but
+        # avoidably). An explicit conflicting storage= is a caller
+        # error, said here not mid-backfill.
+        new_storage = load_meta(spark, new_root).get("storage", "float")
+        if storage is not None and storage != new_storage:
+            raise ValueError(
+                f"new root {new_root} is already initialized "
+                f"with storage={new_storage!r}; resuming with "
+                f"storage={storage!r} would mix layouts — drop "
+                f"the argument or start a fresh new_root")
+    else:
+        new_storage = storage or old_storage
+    # one copy per vector (multi-table roots: the table-0 partition,
+    # a static bucket filter) — counts below stay in vectors,
+    # matching the manifests
+    old_scan = one_copy(read_index(spark, old_root), ometa)
+
     if kind == "ivf_incremental":
-        from .ivf_index import (IVF_TABLE, _load_meta, init_ivf_index,
-                                ivf_ingest_delta, ivf_vectors,
-                                read_ivf_postings)
-        ometa = _load_meta(spark, old_root)
-        old_storage = ometa.get("storage", "float")
-        if path_exists(spark, f"{new_root}/_meta.json"):
-            # RESUME (ADVICE r12): the new root's own meta is the
-            # layout authority — an interrupted float→int8 migration
-            # re-run WITHOUT storage= must keep the new layout, not
-            # fall back to the old root's (the ingest would refuse
-            # loudly, but avoidably). An explicit conflicting
-            # storage= is a caller error, said here not mid-backfill.
-            new_storage = _load_meta(spark, new_root).get(
-                "storage", "float")
-            if storage is not None and storage != new_storage:
-                raise ValueError(
-                    f"new root {new_root} is already initialized "
-                    f"with storage={new_storage!r}; resuming with "
-                    f"storage={storage!r} would mix layouts — drop "
-                    f"the argument or start a fresh new_root")
-        else:
-            new_storage = storage or old_storage
+        from .ivf_index import init_ivf_index, ivf_ingest_delta
+        if not resume:
             n_dim = dim or ometa["dim"]
             if train_k is not None:
                 # unlabeled path: re-train on the given sample, or on
@@ -436,15 +443,14 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
                 # view — quantizer training is statistical, the sim5
                 # reconstruction error is noise at that altitude)
                 sample = (train if train is not None
-                          else ivf_vectors(spark, old_root))
+                          else vectors(spark, old_root))
                 if train_k == "auto" and target_cell_rows is not None:
                     # CLOSED-LOOP sizing (r12 brief #5): k from the
                     # old root's MEASURED occupancy skew, not √N —
                     # the retrain targets the configured posting-scan
                     # budget on the actual distribution
-                    from .ivf_index import verify_ivf_index
                     from .kmeans import suggest_k_feedback
-                    ofsck = verify_ivf_index(spark, old_root)
+                    ofsck = verify(spark, old_root)
                     train_k = suggest_k_feedback(
                         ofsck["index_rows"],
                         ofsck["cell_occupancy"], target_cell_rows)
@@ -464,7 +470,6 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
                     "pass `train` (a labeled sample for "
                     "init_ivf_index) or `train_k` (deterministic "
                     "k-means over `train`/the old root's postings)")
-        old_scan = read_ivf_postings(spark, old_root)
 
         def ingest(delta, bid, prov, extra):
             return ivf_ingest_delta(spark, new_root, delta, bid,
@@ -472,38 +477,12 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
                                     corpus_batch=prov,
                                     manifest_extra=extra)
     else:
-        from .ann_index import (ann_ingest_delta, _load_meta,
-                                read_ann_index)
-        ometa = _load_meta(spark, old_root)
-        old_storage = ometa.get("storage", "float")
-        if path_exists(spark, f"{new_root}/_meta.json"):
-            # RESUME: same layout-authority rule as the IVF branch
-            # (ADVICE r12) — the new root's first ingest froze its
-            # storage; a resume must not re-derive it from the old
-            # root (the per-ingest guard would refuse, avoidably)
-            new_storage = _load_meta(spark, new_root).get(
-                "storage", "float")
-            if storage is not None and storage != new_storage:
-                raise ValueError(
-                    f"new root {new_root} is already initialized "
-                    f"with storage={new_storage!r}; resuming with "
-                    f"storage={storage!r} would mix layouts — drop "
-                    f"the argument or start a fresh new_root")
-        else:
-            new_storage = storage or old_storage
+        from .ann_index import ann_ingest_delta
         n_planes = num_planes if num_planes is not None \
             else ometa["num_planes"]
         n_dim = dim if dim is not None else ometa["dim"]
-        from .ann_index import _num_tables
         n_tables = (num_tables if num_tables is not None
                     else _num_tables(ometa))
-        old_scan = read_ann_index(spark, old_root)
-        if _num_tables(ometa) > 1:
-            # one copy per vector: the table-0 partition (a static
-            # bucket filter, not a dedup shuffle) — counts below
-            # stay in vectors, matching the manifests
-            old_scan = old_scan.filter(
-                F.col("bucket") < (1 << ometa["num_planes"]))
 
         def ingest(delta, bid, prov, extra):
             return ann_ingest_delta(spark, new_root, delta, bid,
@@ -616,12 +595,7 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
             f"expected exactly {expected} — a reused build root or "
             f"an old root compacted mid-migration would serve "
             f"duplicate vectors; start a fresh new_root")
-    if kind == "ivf_incremental":
-        from .ivf_index import verify_ivf_index
-        fsck = verify_ivf_index(spark, new_root)
-    else:
-        from .ann_index import verify_ann_index
-        fsck = verify_ann_index(spark, new_root)
+    fsck = verify(spark, new_root)
     if fsck["violations"]:
         raise RuntimeError(
             f"new root {new_root} fails its fsck — refusing to cut "

@@ -36,15 +36,19 @@ def exact_topk_ids(scan: DataFrame, query_vec: list, k: int,
     """Ground truth: exact fixed-point cosine top-k ids over an
     unpruned (vec_id, embedding) scan — BY CONSTRUCTION the same
     scoring arithmetic and tie order as the index probes, because it
-    IS the probes' re-rank (``ann_index._cosine_rerank``) run over
-    the full scan (dummy bucket column, no probe filter). Recall
-    therefore measures PRUNING loss only; scoring drift is
-    impossible, not merely tested for."""
-    from .ann_index import _cosine_rerank
+    IS the probes' scoring (``vector_index._scores``) run over the
+    full scan (dummy key column, no probe filter) in the probes' tie
+    order. Recall therefore measures PRUNING loss only; scoring
+    drift is impossible, not merely tested for."""
+    from ..queries.similarity import _qdec
+    from .vector_index import _scores
 
+    qci, qsq = _qdec(query_vec)
     full = scan.withColumn("bucket", F.lit(0))
     return [int(r.vec_id) for r in
-            _cosine_rerank(full, query_vec, k, exclude_id).collect()]
+            _scores(full, qci, qsq, exclude_id, "float", "bucket")
+            .orderBy(F.desc("cosine"), F.asc("vec_id"))
+            .limit(k).collect()]
 
 
 def measure_recall(spark: SparkSession, root: str,
@@ -69,19 +73,17 @@ def measure_recall(spark: SparkSession, root: str,
     settings against each other from committed samples alone."""
     import math
 
-    from .ann_index import (_load_meta as _ann_meta, _num_tables,
-                            ann_incremental_topk, ann_vectors)
-    from .ivf_index import (_load_meta as _ivf_meta,
-                            ivf_incremental_topk, ivf_vectors)
+    from .ann_index import ann_incremental_topk
+    from .ivf_index import ivf_incremental_topk
     from .linkage import _index_kind
+    from .vector_index import _num_tables, load_meta, vectors
 
     kind = _index_kind(spark, root)
-    extra: dict = {}
+    meta = load_meta(spark, root)
+    full = vectors(spark, root)
     if kind == "ann_lsh_incremental":
-        meta = _ann_meta(spark, root)
         nt = _num_tables(meta)
         j = int(meta["num_planes"])
-        full = ann_vectors(spark, root)
         if probe_buckets is not None:
             param = {"probe_buckets": probe_buckets}
             # the budget is TOTAL buckets across tables, capped by
@@ -99,8 +101,6 @@ def measure_recall(spark: SparkSession, root: str,
                                         hamming=hamming,
                                         probe_buckets=probe_buckets)
     else:
-        meta = _ivf_meta(spark, root)
-        full = ivf_vectors(spark, root)
         param = {"nprobe": nprobe}
         n_cells = max(1, int(meta.get("n_cells", 1)))
         extra = {"scan_frac": round(min(nprobe, n_cells)
@@ -111,7 +111,6 @@ def measure_recall(spark: SparkSession, root: str,
                                         exclude_id=qid,
                                         nprobe=nprobe)
 
-    full = full.select("vec_id", "embedding")
     hits = 0
     for qid, qvec in queries:
         truth = set(exact_topk_ids(full, qvec, k, exclude_id=qid))
@@ -139,6 +138,7 @@ def measure_recall_batch(spark: SparkSession, root: str,
     from .ivf_index import ivf_batch_topk
     from .linkage import _index_kind
     from .migration import resolve_index_root
+    from .vector_index import load_meta
 
     root = resolve_index_root(spark, root)
     kind = _index_kind(spark, root)
@@ -156,18 +156,13 @@ def measure_recall_batch(spark: SparkSession, root: str,
          for i, (_, vec) in enumerate(queries)],
         "qid BIGINT, embedding ARRAY<FLOAT>").localCheckpoint()
 
+    meta = load_meta(spark, root)
     if kind == "ann_lsh_incremental":
-        import json as _json
-
-        from ..fs import read_text
-        planes = _json.loads(
-            read_text(spark, f"{root}/_meta.json"))["num_planes"]
         got = ann_batch_topk(spark, root, qdf, k=k, hamming=hamming)
-        truth = ann_batch_topk(spark, root, qdf, k=k,
-                               hamming=planes)   # all 2^J buckets
+        truth = ann_batch_topk(spark, root, qdf, k=k,   # all 2^J
+                               hamming=meta["num_planes"])
         param = {"hamming": hamming}
     else:
-        meta = _load_root_meta(spark, root)
         got = ivf_batch_topk(spark, root, qdf, k=k, nprobe=nprobe)
         truth = ivf_batch_topk(spark, root, qdf, k=k,
                                nprobe=meta["n_cells"])  # every cell
@@ -187,14 +182,6 @@ def measure_recall_batch(spark: SparkSession, root: str,
     mean = sum(fracs.get(q, 0.0) for q in qids) / max(1, len(queries))
     return {"recall": round(mean, 4), "k": k,
             "n_queries": len(queries), "param": param}
-
-
-def _load_root_meta(spark: SparkSession, root: str) -> dict:
-    import json as _json
-
-    from ..fs import read_text
-
-    return _json.loads(read_text(spark, f"{root}/_meta.json"))
 
 
 METRICS_DIR = "_metrics/recall"
@@ -231,18 +218,13 @@ def record_recall_sample(spark: SparkSession, root: str,
     import json as _json
 
     from ..fs import write_text_atomic
-    from .ann_index import ann_vectors
-    from .ivf_index import ivf_vectors
     from .linkage import _index_kind
     from .migration import resolve_index_root
+    from .vector_index import vectors
 
     root = resolve_index_root(spark, root)
-    kind = _index_kind(spark, root)
-    scan = (ann_vectors(spark, root)
-            if kind == "ann_lsh_incremental"
-            else ivf_vectors(spark, root))
-    queries = sample_queries(scan.select("vec_id", "embedding"),
-                             n_queries)
+    _index_kind(spark, root)   # loud on anything that is not an index
+    queries = sample_queries(vectors(spark, root), n_queries)
     if len(queries) < max(2, n_queries // 2):
         return None
     rep = measure_recall(spark, root, queries, k=k, nprobe=nprobe,

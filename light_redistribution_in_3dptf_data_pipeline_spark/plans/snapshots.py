@@ -187,10 +187,9 @@ def pins_report(spark: SparkSession, root: str,
     if tables is None:
         if path_exists(spark, f"{root}/_meta.json"):
             from .linkage import _index_kind
+            from .vector_index import router_of
 
-            tables = (("buckets"
-                       if _index_kind(spark, root)
-                       == "ann_lsh_incremental" else "postings"),)
+            tables = (router_of(_index_kind(spark, root)).table,)
         else:
             from .corpus import INGEST_TABLES
             tables = INGEST_TABLES
@@ -424,16 +423,11 @@ def read_vectors_pinned(spark: SparkSession, index_root: str,
     multimodal training reads (``read_linked_pinned``) are
     storage-independent — lossy by exactly the sim5 reconstruction
     error, like every other dequantizing view."""
-    import json as _json
+    from .vector_index import load_meta, router_of
 
-    from ..fs import read_text
-    from .linkage import _index_kind
-
-    table = ("buckets"
-             if _index_kind(spark, index_root) == "ann_lsh_incremental"
-             else "postings")
-    scan = read_pinned_table(spark, index_root, pin, table)
-    meta = _json.loads(read_text(spark, f"{index_root}/_meta.json"))
+    meta = load_meta(spark, index_root)
+    scan = read_pinned_table(spark, index_root, pin,
+                             router_of(meta.get("kind")).table)
     if meta.get("storage", "float") == "int8":
         from pyspark.sql import functions as F
 
@@ -682,11 +676,10 @@ def verify_linked_pin(spark: SparkSession, corpus_root: str,
                                   doc["corpus_pin"])
                .select("doc_id") if corpus_readable else None)
     from .linkage import _index_kind
+    from .vector_index import router_of
 
     for iroot, d in sorted(doc["index_pins"].items()):
-        table = ("buckets"
-                 if _index_kind(spark, iroot) == "ann_lsh_incremental"
-                 else "postings")
+        table = router_of(_index_kind(spark, iroot)).table
         try:
             irep = verify_pin(spark, iroot, d, table=table)
         except ValueError:

@@ -24,6 +24,8 @@ from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     ivf_index as I)
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     recall as R)
+from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
+    vector_index as VI)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -142,7 +144,7 @@ def test_pruning_fires_on_clustered_data(spark, cl, roots):
     scan = I.read_ivf_postings(spark, root)
     scored, pruned = CS.early_exit_scored(
         stats, scan, "cell", probe_cells, qci, qsq, 10,
-        lambda s: I._ivf_scores(s, qci, qsq, 0, "int8"))
+        lambda s: VI._scores(s, qci, qsq, 0, "int8", "cell"))
     assert len(pruned) == 3, (probe_cells, pruned)
     # and the surviving frame still yields the exact top-k
     want = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
