@@ -720,11 +720,11 @@ def batch_topk(spark: SparkSession, root: str, router: Router,
     state = router.check_meta(spark, root, meta, "query")
     key, storage = router.key, meta.get("storage", "float")
     dedup = _num_tables(meta) > 1
-    qci = _checked_dim("embedding", meta["dim"],
-                       f"{router.family}_batch_topk")
+    checked = _checked_dim("embedding", meta["dim"],
+                           f"{router.family}_batch_topk")
     q = (queries.select(F.col(id_col).cast("bigint").alias("qid"),
                         F.col(vec_col).alias("embedding"))
-         .withColumn("qci", _fixed_point(qci))
+         .withColumn("qci", _fixed_point(checked))
          .withColumn("qsq", F.expr(_dot_sql("qci", "qci"))))
     # the pairs carry each query's vector, so a fan-out broadcasts
     # ONE frame: its (chunk's) pairs
