@@ -8,6 +8,8 @@ filtered by Catalyst at the scan.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -36,6 +38,74 @@ def _events_fixture_is_nanos(path: str) -> bool:
         return False
 
 
+# Spark's own inferred schema per table path, memoized per
+# SparkContext: inferring a Parquet schema runs a Spark job (~0.1 s
+# warm on a 4-core host, against ~0.02 s for a read given the
+# schema), and every declared query pays it once per table it reads.
+# An entry is trusted only while the path's tree signature (one
+# getFileStatus, plus a recursive listing for a directory) and the
+# SQL confs that steer inference are unchanged, and not while the
+# newest file is inside the store's mtime-granularity window — the
+# revalidation fs.read_json_doc uses. A hit reads with the memoized
+# schema and starts no job. LRU-bounded; the lock guards only the
+# bookkeeping, so concurrent first loads infer in parallel.
+_SCHEMAS: "dict[str, tuple]" = {}
+_SCHEMAS_JSC = None
+_SCHEMAS_MAX = 64
+_SCHEMAS_LOCK = threading.Lock()
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _memo(spark: SparkSession) -> dict:
+    """The schema memo of ``spark``'s context (emptied when the
+    context changes); call with ``_SCHEMAS_LOCK`` held."""
+    global _SCHEMAS_JSC
+    if _SCHEMAS_JSC is not spark._jsc:
+        _SCHEMAS.clear()
+        _SCHEMAS_JSC = spark._jsc
+    return _SCHEMAS
+
+
+def _read_parquet(spark: SparkSession, path: str,
+                  events: bool) -> "tuple[DataFrame, object]":
+    """(``spark.read.parquet(path)``, its schema), inferring the
+    schema only on a memo miss. ``events``: set ``nanosAsLong`` when
+    the file's ``ts`` is TIMESTAMP(NANOS) (remembered per entry)."""
+    from .fs import is_recent, tree_signature
+
+    sig = tree_signature(spark, path)
+    with _SCHEMAS_LOCK:
+        hit = _memo(spark).get(path)
+    if hit is not None and (hit[0] != sig or is_recent(sig)):
+        hit = None
+    nanos = hit[2] if hit is not None else (
+        events and _events_fixture_is_nanos(path))
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    confs = tuple(spark.conf.get(k, None) for k in _INFER_CONFS)
+    if hit is not None and hit[1] == confs:
+        with _SCHEMAS_LOCK:
+            memo = _memo(spark)
+            memo[path] = memo.pop(path, hit)   # refresh recency
+        return spark.read.schema(hit[3]).parquet(path), hit[3]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if sig is not None:
+        with _SCHEMAS_LOCK:
+            memo = _memo(spark)
+            memo.pop(path, None)
+            if len(memo) >= _SCHEMAS_MAX:
+                memo.pop(next(iter(memo)))
+            memo[path] = (sig, confs, nanos, schema)
+    return df, schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table. Column pruning + predicate pushdown
     happen at the parquet scan because we never materialize here.
@@ -53,22 +123,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       which ``unix_micros``/window functions reject → cast to
       ``timestamp`` (wall-clock values unchanged under UTC session TZ).
     - tz-adjusted TIMESTAMP(MICROS): arrives as TimestampType, no-op.
+
+    The schema Spark infers is memoized per context and path (see
+    ``_SCHEMAS``), so a repeat load starts no Spark job.
     """
     path = f"{sf_dir}/{name}.parquet"
+    df, schema = _read_parquet(spark, path, name == "events")
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        if _events_fixture_is_nanos(path):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, LongType):
+        if isinstance(schema["ts"].dataType, LongType):
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        elif isinstance(schema["ts"].dataType, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str,
@@ -80,3 +150,18 @@ def register_views(spark: SparkSession, sf_dir: str,
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty DataFrame of ``schema`` (DDL string or StructType) as
+    a JVM local relation. ``spark.createDataFrame([], schema)`` plans
+    a Python RDD, so every job over it starts Python worker tasks
+    (~0.2 s each on a 4-core host) to produce no rows."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    jss = spark._jsparkSession
+    return DataFrame(jss.createDataFrame(spark._jvm.java.util.ArrayList(),
+                                         jss.parseDataType(schema.json())),
+                     spark)

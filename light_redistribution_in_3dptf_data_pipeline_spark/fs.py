@@ -179,6 +179,39 @@ def read_json_doc(spark: SparkSession, path: str) -> "dict | None":
     return doc
 
 
+def tree_signature(spark: SparkSession, path: str) -> "tuple | None":
+    """(path, mtime, length) of ``path`` and, when it is a directory,
+    of every file under it (one recursive listing) — the revalidation
+    key of a memo over a file or table directory; None when the path
+    is absent. A rewrite, append or delete anywhere below changes it,
+    except a same-name same-length rewrite within one mtime tick,
+    which callers close with the :data:`_JSON_DOC_RECENT_MS` window
+    (see :func:`is_recent`)."""
+    fs, p = _fs(spark, path)
+    try:
+        st = fs.getFileStatus(p)
+    except Exception:   # Py4JJavaError(FileNotFoundException)
+        return None
+    sig = [(path, int(st.getModificationTime()), int(st.getLen()))]
+    if st.isDirectory():
+        files = fs.listFiles(p, True)
+        while files.hasNext():
+            f = files.next()
+            sig.append((f.getPath().toString(),
+                        int(f.getModificationTime()), int(f.getLen())))
+    return tuple(sorted(sig))
+
+
+def is_recent(sig: tuple) -> bool:
+    """Whether any entry of a :func:`tree_signature` was modified
+    inside the store's mtime-granularity window, so a memo hit on it
+    cannot be trusted yet."""
+    import time
+
+    newest = max((m for _, m, _ in sig), default=0)
+    return time.time() * 1000 - newest <= _JSON_DOC_RECENT_MS
+
+
 # Filesystems whose rename is an atomic metadata operation. On object
 # stores (s3a, gs, abfss) rename is copy+delete — NOT atomic — but
 # there the single PUT of a direct create already is, so each scheme

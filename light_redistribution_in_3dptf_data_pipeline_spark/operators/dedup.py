@@ -74,14 +74,34 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
     shuffle of N·1 rows), packed into a single array column. The
     k-fold row expansion of the naive seeds-crossJoin (N·k shuffled
     rows) never materializes, and downstream stages consume the
-    signature as one value — no unpivot, no re-grouping.
+    signature as one value — no unpivot, no re-grouping. The k mins
+    are one SQL-text ``F.expr`` (queries/similarity.py's note on
+    SQL text: one gateway call, not one per literal and operator).
     """
-    mins = [F.min(F.pmod(F.hash("shingle", F.lit(i)), F.lit(HASH_PRIME)))
-             .alias(f"h{i}") for i in range(num_hashes)]
-    wide = sh.groupBy(id_col).agg(*mins)
-    return wide.select(
-        id_col,
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
+    mins = ", ".join(f"min(pmod(hash(shingle, {i}), {HASH_PRIME}))"
+                     for i in range(num_hashes))
+    return sh.groupBy(id_col).agg(F.expr(f"array({mins})").alias("sig"))
+
+
+def _band_rows(frame: DataFrame, cols: list[str], keys: list[str],
+               name: str) -> DataFrame:
+    """Explode ``frame`` into (cols..., band, ``name``) rows, band
+    ``b`` keyed by the SQL text ``keys[b]`` — the shared banding step
+    of the MinHash and SimHash bucket joins, its band structs one
+    SQL-text ``F.expr``."""
+    structs = ", ".join(f"struct({b} AS band, {key} AS {name})"
+                        for b, key in enumerate(keys))
+    return (frame.select(*cols, F.explode(F.expr(f"array({structs})"))
+                         .alias("bs"))
+            .select(*cols, F.col("bs.band").alias("band"),
+                    F.col(f"bs.{name}").alias(name)))
+
+
+def _minhash_band_keys(bands: int, num_hashes: int) -> list[str]:
+    """Band ``b``'s key: xxhash64 of its slice of the signature."""
+    rpb = num_hashes // bands
+    return [f"xxhash64(slice(sig, {b * rpb + 1}, {rpb}))"
+            for b in range(bands)]
 
 
 def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
@@ -94,15 +114,9 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
     with xxhash64 — a pure map (the old formulation re-grouped N·k
     unpivoted rows: one whole extra shuffle). Only the N·bands band
     rows reach the bucket equi-join."""
-    rpb = num_hashes // bands
-    band_structs = F.array(*[
-        F.struct(F.lit(b).cast("int").alias("band"),
-                 F.xxhash64(F.slice("sig", b * rpb + 1, rpb))
-                  .alias("band_sig"))
-        for b in range(bands)])
-    band_rows = (sig.select(id_col, F.explode(band_structs).alias("bs"))
-                 .select(id_col, F.col("bs.band").alias("band"),
-                         F.col("bs.band_sig").alias("band_sig")))
+    band_rows = _band_rows(sig, [id_col],
+                           _minhash_band_keys(bands, num_hashes),
+                           "band_sig")
     a = band_rows.alias("a")
     b = band_rows.alias("b")
     return (a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -141,17 +155,10 @@ def lsh_neardup_pairs(sh: DataFrame, id_col: str = "doc_id",
     band_sig) key from an identical subtree, which Spark collapses
     via ReusedExchange — the signatures are effectively computed ONCE.
     Returns (doc_a, doc_b, n_shared_bands, est_jaccard)."""
-    rpb = num_hashes // bands
     sig = minhash_signatures(sh, id_col, num_hashes)
-    band_structs = F.array(*[
-        F.struct(F.lit(b).cast("int").alias("band"),
-                 F.xxhash64(F.slice("sig", b * rpb + 1, rpb))
-                  .alias("band_sig"))
-        for b in range(bands)])
-    band_rows = (sig.select(id_col, "sig",
-                            F.explode(band_structs).alias("bs"))
-                 .select(id_col, "sig", F.col("bs.band").alias("band"),
-                         F.col("bs.band_sig").alias("band_sig")))
+    band_rows = _band_rows(sig, [id_col, "sig"],
+                           _minhash_band_keys(bands, num_hashes),
+                           "band_sig")
     a = band_rows.alias("a")
     b = band_rows.alias("b")
     grouped = (a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -241,18 +248,14 @@ SIMHASH_MAX_HAMMING = 3
 def _simhash_band_rows(fp_frame: DataFrame, cols: list[str],
                        fp_col: str, bands: int) -> DataFrame:
     """Explode a fingerprint frame into (cols..., band, slice) rows —
-    the shared banding step of every SimHash bucket join (64/bands
-    bits per slice)."""
+    the banding step of every SimHash bucket join (64/bands bits per
+    slice)."""
     width = 64 // bands
     mask = (1 << width) - 1
-    slices = F.array(*[
-        F.struct(F.lit(b).cast("int").alias("band"),
-                 F.shiftrightunsigned(F.col(fp_col), b * width)
-                  .bitwiseAND(F.lit(mask)).alias("slice"))
-        for b in range(bands)])
-    return (fp_frame.select(*cols, F.explode(slices).alias("bs"))
-            .select(*cols, F.col("bs.band").alias("band"),
-                    F.col("bs.slice").alias("slice")))
+    return _band_rows(
+        fp_frame, cols,
+        [f"shiftrightunsigned(`{fp_col}`, {b * width}) & {mask}"
+         for b in range(bands)], "slice")
 
 
 def simhash_band_candidates(fp: DataFrame, id_col: str = "doc_id",

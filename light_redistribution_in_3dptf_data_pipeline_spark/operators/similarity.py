@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..queries.registry import register
 from ..queries.similarity import (_fixed_dot, _fixed_point, _qdec,
-                                  _query_row, exact_cosine)
+                                  _query_row, component_sums,
+                                  exact_cosine)
 
 NUM_PLANES = 8
 QUERY_VEC_ID = 0
@@ -218,9 +219,7 @@ def ivf_search_topk(emb: DataFrame, query_id: int = QUERY_VEC_ID,
     # scale. split 2^20 in the fold is valid while nv ≤ ~32k per cell
     # (beyond that: sample per cell to train, standard IVF practice).
     csum = (dec.groupBy("cell")
-            .agg(F.array(*[
-                F.sum(F.element_at("ci", i + 1)).alias(f"s{i}")
-                for i in range(64)]).alias("csum"),
+            .agg(component_sums("ci", EMB_DIM).alias("csum"),
                 F.count("*").cast("bigint").alias("nv")))
     probe = (csum.crossJoin(F.broadcast(q.select("qci")))
              .select("cell",
@@ -571,8 +570,7 @@ def write_ivf_index(emb: DataFrame, path: str, id_col: str = "vec_id",
         .write.mode("overwrite").partitionBy("cell")
         .parquet(f"{path}/postings"))
     (dec.groupBy("cell")
-        .agg(F.array(*[F.sum(F.element_at("ci", i + 1)).alias(f"s{i}")
-                       for i in range(EMB_DIM)]).alias("csum"),
+        .agg(component_sums("ci", EMB_DIM).alias("csum"),
              F.count("*").cast("bigint").alias("nv"))
         .write.mode("overwrite").parquet(f"{path}/centroids"))
     _write_index_meta(emb.sparkSession, path,

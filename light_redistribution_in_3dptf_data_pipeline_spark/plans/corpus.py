@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import empty_frame
 from ..operators.dedup import (lsh_neardup_pairs, lsh_verified_neardups,
                                shingles)
 from .pipeline import Pipeline
@@ -548,7 +549,7 @@ def _visible_scan_keys(spark: SparkSession, path: str,
     from ..fs import _fs, glob_literal
 
     if not committed or not keys:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     batches = ",".join(glob_literal(b) for b in committed)
     kids = ",".join(str(int(k)) for k in keys)
     fs, pattern = _fs(spark, f"{glob_literal(path)}/batch_id={{{batches}}}"
@@ -561,7 +562,7 @@ def _visible_scan_keys(spark: SparkSession, path: str,
         nbytes += int(st.getLen())
         nfiles += 1
     if not leaves:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     df = (spark.read.option("basePath", path).schema(schema)
           .parquet(*(f"{path}/{b}/{k}" for b, k in sorted(leaves))))
     if parallelism != "bytes":
@@ -599,7 +600,7 @@ def _read_index(spark: SparkSession, root: str, name: str,
 
     path = f"{root}/{name}"
     if not committed or not path_exists(spark, path):
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     return _visible_scan(spark, path, committed, schema)
 
 

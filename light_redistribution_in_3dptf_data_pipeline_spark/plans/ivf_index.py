@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..fs import path_exists, write_text_atomic
 from ..operators.similarity import EMB_DIM, TOP_K, _fixed_point
-from ..queries.similarity import _fixed_dot, _qdec
+from ..queries.similarity import _fixed_dot, _qdec, component_sums
 from . import vector_index as VI
 from .corpus import (committed_batches, corpus_writer_lock, delete_batch,
                      prune_uncommitted)
@@ -111,18 +111,13 @@ def _load_centroids(spark: SparkSession, root: str,
     and slip the listing signature, so a just-written table always
     re-reads and re-digests; steady-state probes (tables older than
     the window) keep the zero-read hit path."""
-    import time
-
-    from ..fs import _JSON_DOC_RECENT_MS
+    from ..fs import is_recent
 
     want = meta.get("centroid_digest")
     sig = _centroid_table_sig(spark, root)
     hit = _CENTROIDS_CACHE.get(root)
     if (hit is not None and sig is not None and hit[0] == sig
-            and hit[1] == want
-            and time.time() * 1000
-            - max((m for _, m, _ in sig), default=0)
-            > _JSON_DOC_RECENT_MS):
+            and hit[1] == want and not is_recent(sig)):
         _CENTROIDS_CACHE[root] = _CENTROIDS_CACHE.pop(root)  # LRU
         return hit[2]
     rows = (spark.read.parquet(f"{root}/{CENTROIDS_TABLE}")
@@ -218,8 +213,7 @@ def init_ivf_index(spark: SparkSession, root: str, train: DataFrame,
             F.col(cell_col).cast("bigint").alias("cell"),
             ci_col.alias("ci"))
         cents = (dec.groupBy("cell")
-                 .agg(F.array(*[F.sum(F.element_at("ci", i + 1))
-                                for i in range(dim)]).alias("csum"),
+                 .agg(component_sums("ci", dim).alias("csum"),
                       F.count("*").cast("bigint").alias("nv")))
         cents.coalesce(1).write.mode("overwrite").parquet(
             f"{root}/{CENTROIDS_TABLE}")
@@ -261,6 +255,47 @@ def _centroid_score(ci: str):
             / (F.col("nv") * F.lit(1e18)))
 
 
+# (SparkContext, {centroid digest: Broadcast}) — one broadcast of the
+# centroid matrices per frozen quantizer, reused by every ingest and
+# assignment instead of a new one per call that nothing released
+# (each held driver memory and block-manager space for the life of
+# the process). LRU-bounded; an evicted handle is unpersisted, so a
+# frame still holding it re-fetches from the driver if it runs.
+_CENTROID_BROADCASTS: tuple = (None, {})
+_CENTROID_BROADCASTS_MAX = 8
+
+
+def _centroid_broadcast(sc, cent_rows):
+    """The broadcast ``(cells, lo_t, hi_t, denom)`` matrices of the
+    quantizer ``cent_rows`` (cells ascending; the centroid sums split
+    at CSUM_SPLIT and transposed to (dim, k); ``nv``·1e18), made once
+    per context and centroid digest."""
+    import numpy as np
+
+    global _CENTROID_BROADCASTS
+    if _CENTROID_BROADCASTS[0] is not sc._jsc:
+        _CENTROID_BROADCASTS = (sc._jsc, {})
+    memo = _CENTROID_BROADCASTS[1]
+    digest = _centroid_digest(cent_rows)
+    bc = memo.pop(digest, None)
+    if bc is None:
+        cells_sorted = sorted(
+            (int(r.cell), [int(s) for s in r.csum], int(r.nv))
+            for r in cent_rows)
+        cells = np.array([c for c, _, _ in cells_sorted], dtype=np.int64)
+        csum = np.array([s for _, s, _ in cells_sorted], dtype=np.int64)
+        denom = np.array([v for _, _, v in cells_sorted],
+                         dtype=np.float64) * 1e18
+        s = CSUM_SPLIT
+        lo_t = np.mod(csum, s).T.copy()                      # (dim, k)
+        hi_t = ((csum - np.mod(csum, s)) // s).T.copy()
+        bc = sc.broadcast((cells, lo_t, hi_t, denom))
+        if len(memo) >= _CENTROID_BROADCASTS_MAX:
+            memo.pop(next(iter(memo))).unpersist()
+    memo[digest] = bc   # (re-)insert at the fresh end
+    return bc
+
+
 def _attach_cells(delta: DataFrame, cent_rows, dim: int) -> DataFrame:
     """``delta`` columns + assigned ``cell``, computed IN-ROW: one
     Arrow-batched ``mapInPandas`` pass whose task holds the frozen
@@ -297,21 +332,12 @@ def _attach_cells(delta: DataFrame, cent_rows, dim: int) -> DataFrame:
     re-shipped them with EVERY task — immaterial at toy K, a
     K·dim-sized per-task tax once the quantizer has thousands of
     cells. The broadcast ships once per executor and is torrent-
-    distributed; task closures carry only the handle."""
+    distributed; task closures carry only the handle. It is made once
+    per quantizer (see :func:`_centroid_broadcast`)."""
     import numpy as np
 
-    cells_sorted = sorted(
-        (int(r.cell), [int(s) for s in r.csum], int(r.nv))
-        for r in cent_rows)
-    cells = np.array([c for c, _, _ in cells_sorted], dtype=np.int64)
-    csum = np.array([s for _, s, _ in cells_sorted], dtype=np.int64)
-    denom = np.array([v for _, _, v in cells_sorted],
-                     dtype=np.float64) * 1e18
+    bc = _centroid_broadcast(delta.sparkSession.sparkContext, cent_rows)
     s = CSUM_SPLIT
-    lo_t = np.mod(csum, s).T.copy()                      # (dim, k)
-    hi_t = ((csum - np.mod(csum, s)) // s).T.copy()
-    bc = delta.sparkSession.sparkContext.broadcast(
-        (cells, lo_t, hi_t, denom))
     from pyspark.sql.types import LongType, StructField, StructType
 
     # a NEW StructType: StructType.add would mutate the DataFrame's

@@ -75,7 +75,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import EMB_DIM, _fixed_point
-from ..queries.similarity import _fixed_dot, _fixed_dot_sql
+from ..queries.similarity import (_fixed_dot, _fixed_dot_sql,
+                                  component_sums)
 from .ivf_index import CSUM_SPLIT
 from .vector_index import _checked_dim
 
@@ -270,8 +271,7 @@ def _iteration_stats(assigned: DataFrame, dim: int) -> list:
     ride the same groupBy(cell) — partial-aggregated map-side to ≤k
     rows per partition, one k·P-row exchange, one k-row collect."""
     rows = (assigned.groupBy("cell")
-            .agg(F.array(*[F.sum(F.element_at("ci", i + 1))
-                           for i in range(dim)]).alias("csum"),
+            .agg(component_sums("ci", dim).alias("csum"),
                  F.count("*").cast("bigint").alias("nv"),
                  F.sum("x2").alias("sumx2"),
                  F.max_by(

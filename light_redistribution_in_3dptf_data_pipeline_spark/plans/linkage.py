@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import empty_frame
 from ..fs import path_exists
 from .corpus import _load_manifests, _superseded, _visible_scan
 
@@ -292,7 +293,7 @@ def verify_linked(spark: SparkSession, corpus_root: str,
         doc_ids = (_visible_scan(spark, corpus_path, committed_docs)
                    .select("doc_id"))
     else:
-        doc_ids = spark.createDataFrame([], "doc_id BIGINT")
+        doc_ids = empty_frame(spark, "doc_id BIGINT")
     vec_ids = _committed_vec_ids(spark, index_root)
 
     n_docs = doc_ids.count()

@@ -63,6 +63,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import empty_frame
 from ..fs import delete_path, path_exists, write_text_atomic
 from ..operators.similarity import _fixed_point
 from ..queries.similarity import _dot_sql, _qdec, exact_cosine
@@ -238,7 +239,7 @@ def read_index(spark: SparkSession, root: str,
     committed = committed_batches(spark, root)
     path, schema = f"{root}/{router.table}", schema_of(router, meta)
     if not committed or not path_exists(spark, path):
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     if keys is None:
         return _visible_scan(spark, path, committed, schema)
     from .corpus import _visible_scan_keys
@@ -1021,7 +1022,7 @@ def _retain_vectors(spark, root, router, vec_ids, n_files_per_key,
     path = f"{root}/{table}"
     ix = (_visible_scan(spark, path, live, schema)
           if path_exists(spark, path)
-          else spark.createDataFrame([], schema))
+          else empty_frame(spark, schema))
     affected = sorted(
         r.batch_id for r in
         ix.join(targets, "vec_id", "left_semi")

@@ -118,6 +118,15 @@ def _fixed_point(vec: str) -> Column:
                   f" * 1e9 + 0.5D) AS BIGINT))")
 
 
+def component_sums(ci: str, dim: int) -> Column:
+    """``array(sum(ci[1]), …, sum(ci[dim]))``: the exact BIGINT
+    per-component sums of the nano-unit arrays ``ci`` as ONE
+    aggregate expression — the IVF and k-means centroid sums. ``ci``
+    is a column name; |Σci| ≤ nv·2^31, exact in int64."""
+    return F.expr("array(" + ", ".join(
+        f"sum(element_at({ci}, {i}))" for i in range(1, dim + 1)) + ")")
+
+
 def _fixed_dot_sql(x: str, y: str, split: int = 1 << 10) -> str:
     """SQL text of :func:`_fixed_dot` over the SQL texts ``x``/``y``
     (column names, lambda fields or array literals) — for callers
@@ -407,23 +416,21 @@ def ivf_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _fixed_point("embedding").alias("ci"))
 
     # IVF train: one wide aggregate — d BIGINT sums + the count.
-    # (The d sum columns are unavoidable aggregate expressions, but
+    # (The d sums are unavoidable aggregate expressions, but
     # everything DERIVED from them runs as interpreted array folds on
     # the L centroid rows: at d=64 the chained-expression forms cost
     # more in whole-stage-codegen COMPILE time than this query's
     # entire steady-state runtime, and L is tiny by construction.)
-    sums = [F.sum(F.element_at("ci", i + 1)).cast("bigint")
-             .alias(f"c{i}") for i in range(DIMS)]
     wide = vecs.groupBy(F.col("label").alias("clabel")).agg(
-        *sums, F.count("*").cast("bigint").alias("nv"))
-    csum = F.array(*[F.col(f"c{i}") for i in range(DIMS)])
+        component_sums("ci", DIMS).alias("csum"),
+        F.count("*").cast("bigint").alias("nv"))
     sumsq = F.aggregate(
         "csum",
         F.lit(0).cast("decimal(38,0)"),
         lambda acc, c: (acc + (c.cast("decimal(19,0)")
                                * c.cast("decimal(19,0)"))
                         .cast("decimal(38,0)")).cast("decimal(38,0)"))
-    cent = (wide.select("clabel", "nv", csum.alias("csum"))
+    cent = (wide.select("clabel", "nv", "csum")
             .select("clabel", "nv", "csum",
                     F.round(F.sqrt(sumsq.cast("double"))
                             / (F.col("nv") * F.lit(1000000000.0)), 9)

@@ -124,3 +124,31 @@ def test_centroid_memo_hit_and_rewrite_revalidation(spark, tmp_path):
     assert r2 is not r1
     assert sorted((int(r.cell), int(r.nv)) for r in r2) == \
         sorted((int(r.cell), int(r.nv)) for r in r1)
+
+
+def test_centroid_broadcast_made_once_per_quantizer(spark, tmp_path,
+                                                    monkeypatch):
+    """Three ingests into one IVF root make ONE centroid broadcast:
+    the handle is memoized per quantizer digest, not created anew on
+    every ingest and never released."""
+    from pyspark import SparkContext
+
+    root = str(tmp_path / "ivf")
+    I.init_ivf_index(spark, root,
+                     load_table(spark, SF_DIR, "embeddings"))
+    monkeypatch.setattr(I, "_CENTROID_BROADCASTS", (None, {}))
+    made = []
+    orig = SparkContext.broadcast
+
+    def counted(self, value):
+        made.append(1)
+        return orig(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counted)
+    delta = _delta(spark, n=30)
+    for i in range(3):
+        I.ivf_ingest_delta(spark, root,
+                           delta.filter(F.col("vec_id") % 3 == i),
+                           f"b{i}")
+    assert len(made) == 1
+    assert len(I._CENTROID_BROADCASTS[1]) == 1
